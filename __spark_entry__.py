@@ -90,9 +90,7 @@ def q_j1_anti_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select(F.col("o_orderkey").alias("l_orderkey"))
     )
-    kept = drop_deleted(
-        lineitem, deleted, index_fields=["l_orderkey"], dedup_deleted=False
-    )
+    kept = drop_deleted(lineitem, deleted, index_fields=["l_orderkey"])
     return kept.select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
 
 

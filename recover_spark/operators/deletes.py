@@ -1,9 +1,11 @@
 """J1 — anti-join delete application.
 
 Reference: src/glue/jobs/json_to_parquet.py:224-301 (drop_deleted_healthkit_data)
-  - the ``{type}_deleted`` table is itself deduped (W1) before use
   - rows whose composite key appears in the deleted table are removed
-    via a left-anti join on the index fields.
+    via a left-anti join on the index fields.  The reference dedups the
+    ``{type}_deleted`` table (W1) first; that is redundant for an anti
+    join (a key removes its row however often it is listed), so it is
+    not done here, saving a shuffle per delete application.
 
 Spark-first notes
 -----------------
@@ -21,31 +23,16 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from recover_spark.operators.dedup import dedup_latest
-
 
 def drop_deleted(
     df: DataFrame,
     deleted: DataFrame,
     index_fields: Sequence[str],
-    dedup_deleted: bool = True,
     broadcast_deleted: bool = True,
 ) -> DataFrame:
-    """Remove rows whose key exists in ``deleted`` (left-anti join).
-
-    ``dedup_deleted`` mirrors the reference's ordering: the deleted table
-    goes through W1 dedup first (json_to_parquet.py:282-289).  Dedup of
-    the deleted side is semantically redundant for an anti join (any
-    matching key removes the row) but kept for parity and so the
-    broadcast side is minimal.
-    """
+    """Remove rows whose key exists in ``deleted`` (left-anti join)."""
     keys = list(index_fields)
-    deleted_keys = deleted
-    if dedup_deleted and any(
-        c in deleted.columns for c in ("InsertedDate", "export_end_date")
-    ):
-        deleted_keys = dedup_latest(deleted_keys, keys)
-    deleted_keys = deleted_keys.select(*keys)
+    deleted_keys = deleted.select(*keys)
     if broadcast_deleted:
         deleted_keys = F.broadcast(deleted_keys)
     return df.join(deleted_keys, on=keys, how="left_anti")

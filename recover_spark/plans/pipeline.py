@@ -10,10 +10,12 @@ Reference flow (src/glue/jobs/json_to_parquet.py:629-745), per data type:
          -> if nested: relationalize -> child re-key
          -> partitioned parquet write -> [audit WRITE] -> ledgers
 
-Here the same flow is a composition of the engine's operators.  The
-whole chain is lazy: audits use ``df.observe`` — counts ride the SAME
-job as the write instead of forcing four extra scans like the
-reference's ``.count()`` calls (a 4x scan saving at 100 TB).
+Here the same flow is a composition of the engine's operators.  ``run``
+computes the post-delete frame in ONE eager action (a local checkpoint)
+and writes the parent and every relationalized child from it, so the
+source is read once per data type.  Audits use ``df.observe``: their
+counts ride that action instead of the reference's four ``.count()``
+scans, and the A2 empty-input gate reads the observed READ count.
 """
 
 from __future__ import annotations
@@ -46,26 +48,29 @@ class DatasetPipeline:
         self._observations: dict[str, Observation] = {}
 
     def _observe(self, df: DataFrame, stage: str) -> DataFrame:
-        if not self.observe_counts:
-            return df
         obs = Observation(stage)
         self._observations[stage] = obs
         return df.observe(obs, F.count(F.lit(1)).alias("n"))
 
-    def build(
-        self,
-        df: DataFrame,
-        deleted: DataFrame | None = None,
-    ) -> dict[str, DataFrame]:
-        """Build the lazy plan; returns {table_name: DataFrame}."""
+    def _post_delete(
+        self, df: DataFrame, deleted: DataFrame | None, observe: bool
+    ) -> DataFrame:
+        """READ -> W1 dedup -> J1 deletes, with each stage's row count
+        observed when ``observe`` is set."""
         spec = self.spec
-        df = self._observe(df, "READ")
+        self._observations = {}
+        watch = self._observe if observe else lambda frame, _stage: frame
+        df = watch(df, "READ")
         if spec.index_fields:
-            df = dedup_latest(df, spec.index_fields)
-            df = self._observe(df, "DROP_DUPLICATES")
+            df = watch(dedup_latest(df, spec.index_fields), "DROP_DUPLICATES")
         if deleted is not None:
-            df = drop_deleted(df, deleted, spec.index_fields)
-            df = self._observe(df, "DROP_DELETED_SAMPLES")
+            df = watch(
+                drop_deleted(df, deleted, spec.index_fields), "DROP_DELETED_SAMPLES"
+            )
+        return df
+
+    def _tables(self, df: DataFrame) -> dict[str, DataFrame]:
+        spec = self.spec
         if has_nested_fields(df.schema):
             carry = list(spec.index_fields) + [
                 c for c in ("cohort", "ParticipantID") if c in df.columns
@@ -73,23 +78,36 @@ class DatasetPipeline:
             return relationalize(df, spec.name, carry_cols=carry)
         return {spec.name: df}
 
+    def build(
+        self,
+        df: DataFrame,
+        deleted: DataFrame | None = None,
+    ) -> dict[str, DataFrame]:
+        """Build the lazy plan; returns {table_name: DataFrame}."""
+        return self._tables(self._post_delete(df, deleted, self.observe_counts))
+
     def run(
         self,
         df: DataFrame,
         output_root: str,
         deleted: DataFrame | None = None,
     ) -> PipelineResult:
-        """Build and write every output table; collect observed counts."""
-        # A2 — empty-input short-circuit (json_to_parquet.py:658-659);
-        # isEmpty reads at most one partition, not a full count.
-        if df.isEmpty():
-            return PipelineResult(tables={}, counts={})
-        tables = self.build(df, deleted=deleted)
-        for name, frame in tables.items():
-            write_partitioned_parquet(
-                frame, f"{output_root}/dataset={name}", partition_by=("cohort",)
-            )
+        """Compute the post-delete frame once, write every output table
+        from it; collect observed counts."""
+        # The READ count is always observed: the A2 gate needs it.
+        frame = self._post_delete(df, deleted, observe=True)
+        frame = frame.localCheckpoint(eager=True)
         counts = {
             stage: obs.get["n"] for stage, obs in self._observations.items()
         }
-        return PipelineResult(tables=tables, counts=counts)
+        # A2 — empty-input short-circuit (json_to_parquet.py:658-659).
+        if counts["READ"] == 0:
+            return PipelineResult(tables={}, counts={})
+        tables = self._tables(frame)
+        for name, table in tables.items():
+            write_partitioned_parquet(
+                table, f"{output_root}/dataset={name}", partition_by=("cohort",)
+            )
+        return PipelineResult(
+            tables=tables, counts=counts if self.observe_counts else {}
+        )

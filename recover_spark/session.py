@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "recover_spark",
@@ -26,9 +24,11 @@ def get_spark(
 
     Defaults are chosen for a large cluster but work identically on
     local[N]: AQE owns runtime partition sizing, so
-    ``spark.sql.shuffle.partitions`` is only an upper bound.
+    ``spark.sql.shuffle.partitions`` is only an upper bound.  N and the
+    shuffle partitions default to ``SPARK_GRAFT_CPUS``, else the host's
+    CPU count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -38,7 +38,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Arrow for any pandas-UDF hot path (vector ops, multimodal).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -58,6 +58,9 @@ def get_spark(
         # blinds every stats-driven layout (zone maps, row-group
         # skipping on range-clustered/z-ordered writes).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # zstd for every Spark parquet sink (export tables, merge state,
+        # shards): smaller files than the snappy default.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Python DataSource filter pushdown (zip_ndjson member pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -7,6 +7,9 @@ to ``archive/{date}_{run_id}/`` before overwrite (:304-367).
 Spark-first: ``maxRecordsPerFile`` replaces the coalesce arithmetic — it
 sizes files without collapsing parallelism (a plain ``coalesce(n)``
 would serialize the write through n tasks; at 100 TB that matters).
+
+The parquet codec is not chosen here: ``get_spark`` sets zstd as the
+session default, so every parquet sink below writes zstd.
 """
 
 from __future__ import annotations

@@ -78,7 +78,7 @@ class ZipNdjsonReader(DataSourceReader):
             if isinstance(f, EqualTo) and f.attribute == ("member",):
                 preds.append(lambda m, v=f.value: m == v)
             elif isinstance(f, In) and f.attribute == ("member",):
-                preds.append(lambda m, vs=set(f.values): m in vs)
+                preds.append(lambda m, vs=set(f.value): m in vs)
             elif isinstance(f, StringStartsWith) and f.attribute == ("member",):
                 preds.append(lambda m, v=f.value: m.startswith(v))
             else:

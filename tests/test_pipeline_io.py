@@ -97,6 +97,102 @@ def test_dataset_pipeline_end_to_end(spark, tmp_path):
     assert res.counts.get("READ") == 4
 
 
+@pytest.mark.parametrize("observe_counts", [True, False])
+def test_dataset_pipeline_empty_input_leaves_output_untouched(
+    spark, tmp_path, observe_counts
+):
+    reg = SchemaRegistry()
+    spec = reg.register(
+        "testtype",
+        {"GlobalKey": "string", "export_end_date": "string", "v": "int"},
+        index_fields=["GlobalKey"],
+    )
+    existing = tmp_path / "out" / "dataset=testtype" / "cohort=adults_v1"
+    existing.mkdir(parents=True)
+    (existing / "part-0.parquet").write_bytes(b"previous run")
+    empty = spark.createDataFrame(
+        [], "GlobalKey string, export_end_date string, v int, cohort string"
+    )
+    res = DatasetPipeline(spec, observe_counts=observe_counts).run(
+        empty, str(tmp_path / "out")
+    )
+    assert res.tables == {} and res.counts == {}
+    assert os.listdir(existing) == ["part-0.parquet"]
+    assert (existing / "part-0.parquet").read_bytes() == b"previous run"
+
+
+def _nested_export(spark, out):
+    """Run a nested spec over two cohorts whose source rows pass through
+    an accumulator; returns (result, rows read from the source)."""
+    reg = SchemaRegistry()
+    spec = reg.register(
+        "nestedtype",
+        {
+            "GlobalKey": "string",
+            "export_end_date": "string",
+            "SubSamples": "array<struct<x:double>>",
+        },
+        index_fields=["GlobalKey"],
+    )
+    rows = [
+        ("k1", "2023-01-01", [(1.0,)], "adults_v1"),
+        ("k1", "2023-02-01", [(2.0,), (3.0,)], "adults_v1"),
+        ("k2", "2023-01-01", [(4.0,)], "adults_v1"),
+        ("k3", "2023-01-01", [(5.0,), (6.0,), (7.0,)], "pediatric_v1"),
+        ("gone", "2023-01-01", [(8.0,)], "pediatric_v1"),
+    ]
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        reads.add(1)
+        return row
+
+    schema = (
+        "GlobalKey string, export_end_date string, "
+        "SubSamples array<struct<x:double>>, cohort string"
+    )
+    source = spark.sparkContext.parallelize(rows, 3).map(counted)
+    df = spark.createDataFrame(source, schema)
+    deleted = spark.createDataFrame([("gone",)], "GlobalKey string")
+    res = DatasetPipeline(spec).run(df, out, deleted=deleted)
+    return res, reads.value
+
+
+def test_dataset_pipeline_reads_input_once(spark, tmp_path):
+    out = str(tmp_path / "out")
+    res, reads = _nested_export(spark, out)
+    assert res.counts == {"READ": 5, "DROP_DUPLICATES": 4, "DROP_DELETED_SAMPLES": 3}
+    assert reads == res.counts["READ"]
+    parent = spark.read.parquet(f"{out}/dataset=nestedtype")
+    child = spark.read.parquet(f"{out}/dataset=nestedtype_subsamples")
+    assert parent.count() == res.counts["DROP_DELETED_SAMPLES"]
+    assert sorted((r.GlobalKey, r.x) for r in child.collect()) == [
+        ("k1", 2.0), ("k1", 3.0), ("k2", 4.0), ("k3", 5.0), ("k3", 6.0), ("k3", 7.0)
+    ]
+
+
+def test_dataset_pipeline_small_input_writes_one_zstd_file_per_cohort(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "out"
+    _nested_export(spark, str(out))
+    tables = sorted(p.name for p in out.iterdir())
+    assert tables == ["dataset=nestedtype", "dataset=nestedtype_subsamples"]
+    for table in tables:
+        cohorts = sorted(p.name for p in (out / table).iterdir() if p.is_dir())
+        assert cohorts == ["cohort=adults_v1", "cohort=pediatric_v1"]
+        for cohort in cohorts:
+            files = list((out / table / cohort).glob("*.parquet"))
+            assert len(files) == 1, (table, cohort, files)
+            md = pq.ParquetFile(str(files[0])).metadata
+            codecs = {
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            }
+            assert codecs == {"ZSTD"}
+
+
 def test_streaming_available_now(spark, tmp_path):
     from recover_spark.streaming.incremental import incremental_ingest
 

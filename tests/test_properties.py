@@ -52,7 +52,7 @@ def test_anti_join_invariants(spark, rows, deleted_keys):
     deleted = spark.createDataFrame(
         [(k,) for k in deleted_keys] or [("__none__",)], "GlobalKey string"
     )
-    out = drop_deleted(df, deleted, ["GlobalKey"], dedup_deleted=False).collect()
+    out = drop_deleted(df, deleted, ["GlobalKey"]).collect()
     expect = [(k, d, v) for k, d, v in rows if k not in set(deleted_keys)]
     assert sorted((r.GlobalKey, r.export_end_date, r.v) for r in out) == sorted(expect)
 

@@ -130,7 +130,7 @@ class TestBloomColumnCollisions:
             [(i,) for i in range(0, 100, 10)], "RecordID long"
         )
         got = drop_deleted_filtered(df, deleted, ["RecordID"])
-        want = drop_deleted(df, deleted, ["RecordID"], dedup_deleted=False)
+        want = drop_deleted(df, deleted, ["RecordID"])
         assert sorted(got.columns) == sorted(df.columns)
         assert {tuple(r) for r in got.collect()} == {
             tuple(r) for r in want.collect()

@@ -217,6 +217,31 @@ class TestZipPythonDataSource:
         assert len(got) == 3
         assert {r["member"] for r in got} == {"part_a.ndjson"}
 
+    def test_member_in_filter_pushdown(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+        from pyspark.sql.datasource import In
+
+        from recover_spark.sources.zip_datasource import (
+            ZipNdjsonDataSource,
+            ZipNdjsonReader,
+        )
+
+        archive = self._fixture(tmp_path)
+        reader = ZipNdjsonReader({"path": archive})
+        pushed = In(("member",), ("part_b.ndjson", "gone.ndjson"))
+        assert list(reader.pushFilters([pushed])) == []
+        assert [p.member for p in reader.partitions()] == ["part_b.ndjson"]
+
+        spark.dataSource.register(ZipNdjsonDataSource)
+        got = (
+            spark.read.format("zip_ndjson")
+            .load(archive)
+            .filter(F.col("member").isin("part_b.ndjson", "gone.ndjson"))
+            .collect()
+        )
+        assert len(got) == 2
+        assert {r["member"] for r in got} == {"part_b.ndjson"}
+
 
 class TestZipStreamingDataSource:
     """Streaming arrival of zip exports: watermark offsets over archive
