@@ -46,15 +46,17 @@ class TableSpec:
     order_fields: list[str] = field(default_factory=list)
 
     def struct_type(self, include_partitions: bool = True) -> T.StructType:
-        fields = [
-            T.StructField(name, parse_type(ts), nullable=True)
+        """The table's StructType, parsed in one JVM call."""
+        columns = ",".join(
+            "`{}`:{}".format(name.replace("`", "``"), ts)
             for name, ts in self.columns.items()
-        ]
+        )
+        struct = parse_type(f"struct<{columns}>")
         if include_partitions:
             for pk in self.partition_keys:
                 if pk not in self.columns:
-                    fields.append(T.StructField(pk, T.StringType(), nullable=True))
-        return T.StructType(fields)
+                    struct.add(pk, T.StringType(), nullable=True)
+        return struct
 
 
 class SchemaRegistry:

@@ -13,6 +13,33 @@ import os
 
 from pyspark.sql import SparkSession
 
+# JIT policy for short-lived drivers: C2's tier-4 thresholds raised 5x
+# over HotSpot's defaults (5000/600/15000/40000), so only really hot code
+# gets the expensive C2 compile and the rest stays in C1.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 "
+    "-XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
+)
+
+_MAX_DRIVER_MEM_MB = 8192
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 8g capped at half of the
+    host's ``MemTotal``."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(_MAX_DRIVER_MEM_MB, total_mb // 2)}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MEM_MB}m"
+
 
 def get_spark(
     app_name: str = "recover_spark",
@@ -27,6 +54,20 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` is only an upper bound.  N and the
     shuffle partitions default to ``SPARK_GRAFT_CPUS``, else the host's
     CPU count.
+
+    The driver JVM gets ``JIT_POLICY`` through
+    ``spark.driver.defaultJavaOptions``, which Spark prepends to
+    ``spark.driver.extraJavaOptions``, so callers that set the latter keep
+    it (``extra_conf`` can still replace it).  A short-lived ETL driver
+    spends most of its CPU in the JIT, not in tasks: one timed
+    ``export_batch`` operation of the benchmark (local[3], 4-core host)
+    used 24.9 JVM CPU-s, 17.6 of them in C1/C2 compiler threads and 2.8
+    in task threads.  With C2's thresholds raised 5x, ``items_per_cpu_s``
+    rose 21% on that workload, and a 10x larger export (200k records)
+    kept its wall time.  Raised 10x, ``items_per_cpu_s`` rose 34% but the
+    10x export got slower (median 17.3 s against 16.3 s); C1 only
+    (``-XX:TieredStopAtLevel=1``) made it 27-38% slower.  The driver heap
+    defaults to ``default_driver_memory()``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     builder = (
@@ -64,7 +105,8 @@ def get_spark(
         # Python DataSource filter pushdown (zip_ndjson member pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", default_driver_memory())
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -27,6 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 
 def incremental_ingest(
@@ -147,7 +148,8 @@ def merge_pipeline_batch(
 
     1. W1 keyed-latest dedup WITHIN the batch (mergeable: the argmax by
        the ordering columns is associative, so batch-then-merge equals
-       one global dedup);
+       one global dedup), materialized once; the same action observes
+       the touched buckets;
     2. read back ONLY the state buckets the batch touches (partition
        pruning — per-batch cost is O(batch + touched buckets), not
        O(corpus));
@@ -175,10 +177,18 @@ def merge_pipeline_batch(
 
     keys = list(index_fields)
     bucket = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
-    fresh = dedup_latest(
-        batch, keys, order_fields=order_fields, tiebreakers=list(tiebreakers)
-    ).withColumn(_BUCKET_COL, bucket)
-    touched = [r[0] for r in fresh.select(_BUCKET_COL).distinct().collect()]
+    # the batch is scanned and deduped once: one eager local checkpoint,
+    # whose action also observes the touched buckets
+    buckets = Observation()
+    fresh = (
+        dedup_latest(
+            batch, keys, order_fields=order_fields, tiebreakers=list(tiebreakers)
+        )
+        .withColumn(_BUCKET_COL, bucket)
+        .observe(buckets, F.collect_set(_BUCKET_COL).alias("touched"))
+        .localCheckpoint(eager=True)
+    )
+    touched = sorted(buckets.get["touched"])
     if not touched:
         return
     merged = fresh

@@ -157,6 +157,35 @@ def test_incremental_equals_batch_with_mid_stream_replay(spark, tmp_path):
     assert r1.InsertedDate == "2024-01-15"
 
 
+def test_merge_scans_batch_once(spark, tmp_path):
+    """Each merge scans and dedups its batch once: the touched buckets
+    are observed in the action that materializes it, into an empty and
+    into an existing state alike."""
+    from recover_spark.streaming.incremental import (
+        merge_pipeline_batch,
+        pipeline_tables_from_state,
+    )
+
+    state = str(tmp_path / "state")
+    for rows in (F1, F2):
+        reads = spark.sparkContext.accumulator(0)
+
+        def counted(row, reads=reads):
+            reads.add(1)
+            return row
+
+        source = spark.sparkContext.parallelize(
+            [tuple(r.get(f.name) for f in SCHEMA.fields) for r in rows], 2
+        ).map(counted)
+        merge_pipeline_batch(
+            spark, spark.createDataFrame(source, SCHEMA), state, ["RecordID"],
+            deleted=_deleted(spark), n_buckets=8,
+        )
+        assert reads.value == len(rows)
+    parent = pipeline_tables_from_state(spark, state, "hr", ["RecordID"])["hr"]
+    assert {r.RecordID for r in parent.select("RecordID").collect()} == {"r1", "r2", "r3"}
+
+
 def test_state_layout_prunes_to_touched_buckets(spark, tmp_path):
     """The state is hive-partitioned on the hash bucket, so the merge's
     read-back scans only touched buckets (PartitionFilters, not a full

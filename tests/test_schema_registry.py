@@ -40,6 +40,39 @@ def test_default_registry_covers_reference_catalog(spark):
     assert reg["EnrolledParticipants"].partition_keys == ["cohort"]
 
 
+def test_struct_type_equals_per_column_parse(spark):
+    """One parse per table gives the StructType a parse per column gives,
+    for every shipped table, with and without partition columns; each
+    call returns a fresh StructType."""
+    from recover_spark.schemas.registry import parse_type
+
+    reg = load_default_registry()
+    for name in reg.names():
+        spec = reg[name]
+        want = T.StructType(
+            [T.StructField(c, parse_type(ts), True) for c, ts in spec.columns.items()]
+        )
+        assert spec.struct_type(include_partitions=False) == want, name
+        for pk in spec.partition_keys:
+            if pk not in spec.columns:
+                want = want.add(pk, T.StringType(), True)
+        got = spec.struct_type()
+        assert got == want, name
+        assert got is not spec.struct_type()
+
+
+def test_struct_type_quotes_column_names(spark):
+    from recover_spark.schemas.registry import SchemaRegistry
+
+    spec = SchemaRegistry().register(
+        "odd", {"a b": "int", "x`y": "array<struct<v:double>>", "c.d": "string"}
+    )
+    assert spec.struct_type().fieldNames() == ["a b", "x`y", "c.d", "cohort"]
+    assert spec.struct_type()["x`y"].dataType == T.ArrayType(
+        T.StructType([T.StructField("v", T.DoubleType())])
+    )
+
+
 def test_relationalize_reference_golden(spark, tmp_path):
     """Reproduce the reference's nested-data golden case exactly
     (tests/test_json_to_parquet.py:836-906): the child table is named
