@@ -1015,8 +1015,6 @@ def q_stream_sample_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         payload_col="event_id",
         k=8,
-        # bench key space = event types (bounded enum) -> driver fold
-        bounded_state=True,
     )
     q.awaitTermination(300)
     view = read_sample_matview(spark, f"{run_dir}/state")
@@ -1178,8 +1176,6 @@ def q_stream_kmv_overlap_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         payload_col="user_id",
         k=k,
-        # bench key space = event types (bounded enum) -> driver fold
-        bounded_state=True,
     )
     q.awaitTermination(300)
     est = read_sample_overlap(spark, f"{run_dir}/state", "event_type", k=k)
@@ -3553,8 +3549,6 @@ def q_stream_emb_drift_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = maintain_vector_matview(
         stream, f"{run_dir}/state", f"{run_dir}/ckpt",
         ["label", "era"], "embedding", 64,
-        # bench key space = (label, era) cohorts (bounded) -> driver fold
-        bounded_state=True,
     )
     q.awaitTermination(300)
     return read_embedding_drift_matview(
@@ -7443,8 +7437,6 @@ def _shared_calibration_state(spark: SparkSession, sf_dir: str) -> str:
     q = maintain_calibration_matview(
         stream, f"{run_dir}/state", f"{run_dir}/ckpt",
         ["event_type"], "score", "label", bins=10,
-        # bench key space = event types (bounded enum) -> driver fold
-        bounded_state=True,
     )
     q.awaitTermination(300)
     state = f"{run_dir}/state"
@@ -8584,7 +8576,6 @@ def q_stream_heartbeat_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = maintain_heartbeat_matview(
         stream, f"{run_dir}/state", f"{run_dir}/ckpt", ["k"], "ts",
-        bounded_state=True,  # k = user_id % 200: geometry-bounded keys
     )
     q.awaitTermination(300)
     out = read_heartbeat_matview(spark, f"{run_dir}/state", 86400)
@@ -8751,8 +8742,6 @@ def q_stream_bootstrap_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderkey",
         n_replicates=40,
-        # bench key space = order priorities (bounded enum) -> driver fold
-        bounded_state=True,
     )
     q.awaitTermination(300)
     return read_bootstrap_matview(

@@ -220,21 +220,25 @@ def mmr_rerank(
         .alias("__rel"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     ).withColumn("__norm", l2_norm(F.col("__v")))
-    # Pin EAGERLY, then run the guard count over the pinned rows (r15,
-    # guide §2.1): the old order counted ``candidates`` first, so the
-    # whole upstream retriever pipeline executed twice — once for the
-    # guard, once to materialize base.  Counting the checkpoint is
-    # O(partitions); the refusal condition is the identical row count.
-    base = base.localCheckpoint(eager=True)
+    # The guard count fills a cache that the checkpoint then reads, so
+    # the upstream retriever runs once; the cache is released before
+    # a refusal, so an over-cap set is not left pinned.
     if max_candidates is not None:
-        n_c = base.count()
-        if n_c > max_candidates:
-            raise ValueError(
-                f"mmr_rerank candidate side has {n_c} rows "
-                f"(max_candidates={max_candidates}); MMR is a re-rank "
-                "stage over top-R candidate lists — run a retriever "
-                "first, or raise the bound explicitly"
-            )
+        cached = base.persist()
+        try:
+            n_c = cached.count()
+            if n_c > max_candidates:
+                raise ValueError(
+                    f"mmr_rerank candidate side has {n_c} rows "
+                    f"(max_candidates={max_candidates}); MMR is a "
+                    "re-rank stage over top-R candidate lists — run a "
+                    "retriever first, or raise the bound explicitly"
+                )
+            base = cached.localCheckpoint(eager=True)
+        finally:
+            cached.unpersist()
+    else:
+        base = base.localCheckpoint(eager=True)
 
     w1 = Window.partitionBy("__q").orderBy(
         F.col("__rel").desc(), F.col("__d").asc()

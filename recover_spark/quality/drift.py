@@ -107,20 +107,14 @@ def binned_counts_against_edges(
     return exploded.groupBy("column", "bin").agg(F.count(F.lit(1)).alias(f"n_{tag}"))
 
 
-# ks_drift_by_period inlining policy (r15, A/B'd at sf0.1, interleaved
-# same-JVM medians): inlining the edge grid / period domain as literals
-# (one small driver job each) LOSES to the lazy subtree form — v9
-# 0.90 s lazy/lazy vs 1.91/1.56/2.72 s for the inlined variants,
-# v17_fdr_bh statistically flat — because AQE exchange reuse already
-# runs the redundant branches nearly free inside ONE fully-parallel
-# job, while each collect is a SEQUENTIAL driver job (the r14
-# rejected-attempt-(b) lesson, reproduced and re-measured).  What DID
-# pay here was removing the second whole-pipeline execution from
-# fdr_bh (window-count m, no extra job: v17 4.57 -> ~3.4 s) and the
-# local-relation (column x bin) scaffold.  Flags kept so the A/B is
-# one-line re-runnable.
-_KS_INLINE_EDGES = False
-_KS_INLINE_PERIODS = False
+# ks_drift_by_period keeps the edge grid and the period domain as lazy
+# subtrees (A/B'd at sf0.1, interleaved same-JVM medians): inlining
+# either as literals (one small driver job each) LOSES — v9 0.90 s
+# lazy/lazy vs 1.91/1.56/2.72 s for the inlined variants — because AQE
+# exchange reuse already runs the redundant branches nearly free inside
+# ONE fully-parallel job, while each collect is a SEQUENTIAL driver
+# job.  Inlined edges pay only in chi2_cell_residuals
+# (``_edge_binned_pair(inline_edges=True)``).
 
 
 def _edges_literal_map(
@@ -663,53 +657,16 @@ def ks_drift_by_period(
     cols = list(cols)
     if not cols:
         raise ValueError("cols must be non-empty")
-    # NOTE (r14 optimization round, measured and REJECTED — twice):
-    # the plan used to embed (and re-execute) the edge aggregate and
-    # both binned fact passes in every consumer branch — 24 parquet
-    # scans and 16 exact-percentile evaluations in one v17_fdr_bh
-    # plan.  Both SUBTREE-dedup attempts LOST to the redundant
-    # one-job plan on interleaved same-JVM medians: (a) lazy-
-    # localCheckpoint pins (v9_drift_ks_series 1.3 s -> 6.4 s —
-    # stat-less LogicalRDD leaves degrade every join to
-    # SortMergeJoin, and each materialization is its own job); (b)
-    # collect + local-relation materialization of the bounded stages
-    # (v17_fdr_bh 5.0 -> 9.0 s — four SEQUENTIAL driver jobs replace
-    # one fully-parallel job, and per-job fixed cost dominates at
-    # these sizes).  What DOES pay (r15, VERDICT r14 #4) is inlining
-    # only the EDGE GRID: one tiny driver job collects the one-row
-    # edge aggregate and the cutpoints enter every bucketing
-    # expression as literals (bit-identical doubles — see
-    # _edges_literal_map), so the re-executed branches no longer
-    # carry a percentile evaluation or a baseline scan for edges;
-    # the data-sized binned passes still ride one AQE job at full
-    # parallelism exactly as before.
-    edges = (
-        _edges_literal_map(baseline, cols, n_grid, edge_accuracy)
-        if _KS_INLINE_EDGES
-        else None
-    )
-    edges_row = (
-        None
-        if edges is not None
-        else quantile_edge_row(baseline, cols, n_grid, edge_accuracy)
-    )
+    # The edge grid and period domain stay lazy subtrees: see the
+    # inlining measurement above _edges_literal_map.
+    edges_row = quantile_edge_row(baseline, cols, n_grid, edge_accuracy)
 
     def binned(df: DataFrame, with_period: bool) -> DataFrame:
         per_col = []
-        if edges is None:
-            j = df.crossJoin(F.broadcast(edges_row))
-        else:
-            j = df
+        j = df.crossJoin(F.broadcast(edges_row))
         for c in cols:
             v = F.col(c).cast("double")
-            if edges is None:
-                idx = F.size(F.filter(F.col(f"__e_{c}"), lambda e: e <= v))
-            else:
-                esc = c.replace("`", "``")
-                idx = F.expr(
-                    f"size(filter({_literal_edges_sql(edges[c])}, "
-                    f"e -> e <= CAST(`{esc}` AS DOUBLE)))"
-                )
+            idx = F.size(F.filter(F.col(f"__e_{c}"), lambda e: e <= v))
             per_col.append(
                 F.when(
                     v.isNotNull(),
@@ -740,21 +697,6 @@ def ks_drift_by_period(
     periods = current.select(
         F.col(period_col).alias("period")
     ).distinct()
-    # r15: the period domain is monitoring metadata (weeks/months —
-    # bounded by the calendar, not the data), so collect it once and
-    # scaffold from a local relation: the lazy distinct subtree was
-    # re-executed in every consumer branch (two extra current-era
-    # scans per reference in the v17_fdr_bh plan).  Past the cap the
-    # distributed distinct stays — behavior unchanged, just not
-    # driver-materialized.  Row objects round-trip values exactly
-    # (same type mapping both directions).
-    _max_periods = 4096
-    if _KS_INLINE_PERIODS:
-        _rows = periods.limit(_max_periods + 1).collect()
-        if len(_rows) <= _max_periods:
-            periods = current.sparkSession.createDataFrame(
-                _rows, schema=periods.schema
-            )
     frame = periods.select("period", col_lit).select(
         "period", "column", bins
     )

@@ -48,10 +48,10 @@ from recover_spark.quality.drift import (
     top_category_bins,
 )
 from recover_spark.streaming.matview import (
-    _applied_batch_id,
-    _BATCH_MARKER,
+    _commit_state,
     _recover_state,
-    _swap_state,
+    _replayed,
+    _write_arrow,
 )
 
 _META_NAME = "_drift_meta.json"
@@ -129,11 +129,8 @@ def merge_drift_counts(
     meta = _read_meta(state_path)
     cols, n_bins = meta["cols"], meta["n_bins"]
     counts_path = os.path.join(state_path, "counts")
-    _recover_state(counts_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(counts_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(counts_path, batch_id):
+        return
     edges_row = spark.read.parquet(os.path.join(state_path, "edges"))
     # The batch pass (data-sized) stays one Spark aggregate; its RESULT
     # is geometry-bounded — |cols| x (n_bins+1) integer rows — so the
@@ -167,16 +164,7 @@ def merge_drift_counts(
             "n_cur": pa.array([n for _, n in rows], type=pa.int64()),
         }
     )
-    tmp = counts_path + ".tmp"
-    if Path(tmp).exists():
-        import shutil as _shutil
-
-        _shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, counts_path)
+    _commit_state(counts_path, batch_id, lambda tmp: _write_arrow(table, tmp))
 
 
 def maintain_drift_matview(
@@ -287,11 +275,8 @@ def merge_categorical_drift_counts(
     meta = _read_cat_meta(state_path)
     cols = meta["cols"]
     counts_path = os.path.join(state_path, "cat_counts")
-    _recover_state(counts_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(counts_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(counts_path, batch_id):
+        return
     top = spark.read.parquet(os.path.join(state_path, "cat_bins"))
     partial = pooled_category_counts(
         category_counts(batch, cols, "cur"), top, "cur"
@@ -305,11 +290,7 @@ def merge_categorical_drift_counts(
         )
     else:
         merged = partial
-    tmp = counts_path + ".tmp"
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, counts_path)
+    _commit_state(counts_path, batch_id, merged.coalesce(1).write.parquet)
 
 
 def maintain_categorical_drift_matview(

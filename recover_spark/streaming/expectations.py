@@ -44,10 +44,10 @@ from recover_spark.functions.local import tiny_df
 
 from recover_spark.quality.expectations import parse_suite, run_suite
 from recover_spark.streaming.matview import (
-    _applied_batch_id,
-    _BATCH_MARKER,
+    _commit_state,
     _recover_state,
-    _swap_state,
+    _replayed,
+    _write_arrow,
 )
 
 _SUITE_NAME = "_suite.json"
@@ -113,11 +113,8 @@ def merge_expectation_counts(
     its integer counters persist."""
     suite = _read_suite(state_path)
     counts_path = os.path.join(state_path, "counts")
-    _recover_state(counts_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(counts_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(counts_path, batch_id):
+        return
     results = run_suite(batch, suite)
     # exists-type: n=0 and bad = 0/1 so the AND folds as sum(bad)==0
     acc: dict[int, list[int]] = {}
@@ -153,16 +150,7 @@ def merge_expectation_counts(
             "bad": pa.array([v[1] for _, v in rows], type=pa.int64()),
         }
     )
-    tmp = counts_path + ".tmp"
-    if Path(tmp).exists():
-        import shutil as _shutil
-
-        _shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, counts_path)
+    _commit_state(counts_path, batch_id, lambda tmp: _write_arrow(table, tmp))
 
 
 def maintain_expectations_matview(

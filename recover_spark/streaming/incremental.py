@@ -548,7 +548,7 @@ def compact_dedup_state(spark, state_path: str) -> dict:
 
     from pyspark.sql import functions as _F
 
-    from recover_spark.streaming.matview import _recover_state, _swap_state
+    from recover_spark.streaming.matview import _commit_state, _recover_state
 
     _recover_state(state_path)
 
@@ -565,11 +565,14 @@ def compact_dedup_state(spark, state_path: str) -> dict:
         .distinct()
         .localCheckpoint(eager=True)  # materialize before the swap
     )
-    tmp = state_path + ".tmp"
-    digests.withColumn("__batch", _F.lit(-1)).coalesce(1).write.mode(
-        "overwrite"
-    ).partitionBy("__batch").parquet(tmp)
-    _swap_state(tmp, state_path)
+    _commit_state(
+        state_path,
+        None,
+        digests.withColumn("__batch", _F.lit(-1))
+        .coalesce(1)
+        .write.partitionBy("__batch")
+        .parquet,
+    )
     return {"files_before": before, "files_after": n_files()}
 
 

@@ -17,6 +17,23 @@ the swap but before the checkpoint commit replays the batch — the
 sidecar check then skips it instead of double-counting, so replays
 after a crash converge to the same state (SURVEY.md §2.9).
 
+Every merge follows one commit protocol, in two private helpers that
+the drift, expectation and corpus-dedup states share:
+
+- ``_replayed(state_path, batch_id)`` heals a mid-swap crash
+  (``_recover_state``) and reports whether ``batch_id`` is already
+  applied, in which case the merge returns without work;
+- ``_commit_state(state_path, batch_id, write)`` clears a stale
+  ``.tmp``, lets ``write(tmp)`` produce the next generation there,
+  stamps the ``_applied_batch_id`` marker into it and swaps it in
+  (``_swap_state``).
+
+A state that grows with the data's keys folds in one Spark plan (the
+batch partial unioned with the previous state and re-aggregated), so
+it is never collected to the driver.  Only states bounded by their
+configuration fold on the driver: the |cols|^2 correlation pairs
+here, the frozen drift bins and the suite counters.
+
 Only mergeable aggregates are supported (count/sum/min/max); avg is
 derived (sum/count) at read time, never stored.
 """
@@ -25,7 +42,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import lru_cache
 from pathlib import Path
 
@@ -34,30 +51,6 @@ from pyspark.sql import functions as F
 
 
 _BATCH_MARKER = "_applied_batch_id"
-
-
-def _pa_key_array(pa, partial: DataFrame, col: str, values: list):
-    """Key column for a driver-side Arrow fold, TYPED from the Spark
-    partial's schema so the persisted state schema is identical to the
-    distributed fold's (pyarrow would otherwise infer int64 for an
-    int32 key and the two modes would diverge on schema).  Unmapped
-    types fall back to pyarrow inference."""
-    m = {
-        "string": pa.string(),
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "smallint": pa.int16(),
-        "tinyint": pa.int8(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "boolean": pa.bool_(),
-        "date": pa.date32(),
-    }
-    try:
-        t = m.get(partial.schema[col].dataType.simpleString())
-    except KeyError:
-        t = None
-    return pa.array(values, type=t) if t is not None else values
 
 
 def _recover_state(state_path: str) -> None:
@@ -104,6 +97,42 @@ def _applied_batch_id(state_path: str) -> int | None:
     return None
 
 
+def _replayed(state_path: str, batch_id: int | None) -> bool:
+    """Heal a mid-swap crash, then tell whether ``batch_id`` is a
+    replay of an already-applied batch (the merge must skip it)."""
+    _recover_state(state_path)
+    if batch_id is None:
+        return False
+    applied = _applied_batch_id(state_path)
+    return applied is not None and batch_id <= applied
+
+
+def _commit_state(
+    state_path: str,
+    batch_id: int | None,
+    write: Callable[[str], object],
+) -> None:
+    """Commit the next state generation: ``write(tmp)`` fills a fresh
+    tmp dir, the batch-id marker lands inside it (so it swaps in
+    atomically with the state it describes), then the crash-safe
+    swap replaces the live generation."""
+    tmp = state_path + ".tmp"
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    write(tmp)
+    if batch_id is not None:
+        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
+    _swap_state(tmp, state_path)
+
+
+def _write_arrow(table, tmp: str) -> None:
+    """``_commit_state`` writer for a driver-built Arrow table."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+
+
 def merge_counts(
     spark: SparkSession,
     batch: DataFrame,
@@ -111,7 +140,6 @@ def merge_counts(
     key_cols: Sequence[str],
     value_col: str | None = None,
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Merge one batch's partial (count [, sum]) into the state table.
 
@@ -120,36 +148,19 @@ def merge_counts(
     all rows seen (mergeability), so state size stays O(distinct keys)
     no matter how many batches have run.
 
-    ``bounded_state=True`` (r14 optimization) declares the key space
-    GEOMETRY-bounded (e.g. count-min cells: keys x depth x width) so
-    the state fold may run driver-side via Arrow (the
-    merge_drift_counts pattern) — integer/two-operand-add arithmetic,
-    bit-identical to the Spark fold, without the per-batch prev-scan +
-    shuffle + committer round.  Leave False for key spaces that grow
-    with the data (guide §5: the driver does no DATA work).
-
     When ``batch_id`` is given (foreachBatch), a batch whose id is <=
     the persisted last-applied id is a crash replay and is skipped —
     this is what upgrades at-least-once foreachBatch to effectively-once.
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if value_col is not None:
         aggs.append(F.sum(value_col).alias(f"sum_{value_col}"))
     partial = batch.groupBy(*keys).agg(*aggs)
 
-    state = Path(state_path)
-    if bounded_state:
-        _merge_counts_driver(
-            partial, state_path, keys, value_col, batch_id
-        )
-        return
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merge_aggs = [F.sum("n_rows").alias("n_rows")]
         if value_col is not None:
@@ -160,68 +171,7 @@ def merge_counts(
     else:
         merged = partial
 
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        # Marker travels inside the tmp dir so it swaps in atomically
-        # with the state it describes.
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
-
-
-def _merge_counts_driver(
-    partial: DataFrame,
-    state_path: str,
-    keys: list,
-    value_col: str | None,
-    batch_id: int | None,
-) -> None:
-    """Driver-side Arrow fold of a GEOMETRY-BOUNDED (count [, sum])
-    state: per key the fold adds the state row to the batch row —
-    integer adds, plus at most one two-operand IEEE add for the sum
-    column, bit-identical in any engine and operand order."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    sum_col = f"sum_{value_col}" if value_col is not None else None
-    val_cols = ["n_rows"] + ([sum_col] if sum_col else [])
-    acc: dict[tuple, list] = {
-        tuple(r[c] for c in keys): [r[c] for c in val_cols]
-        for r in partial.collect()
-    }
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
-        for i in range(prev.num_rows):
-            k = tuple(pc[c][i] for c in keys)
-            row = acc.get(k)
-            if row is None:
-                acc[k] = [pc[c][i] for c in val_cols]
-            else:
-                for j, c in enumerate(val_cols):
-                    a, b = row[j], pc[c][i]
-                    row[j] = b if a is None else (a if b is None else a + b)
-    rows = sorted(
-        acc.items(), key=lambda kv: tuple(map(str, kv[0]))
-    )
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [k[j] for k, _ in rows])
-    cols_out["n_rows"] = pa.array(
-        [v[0] for _, v in rows], type=pa.int64()
-    )
-    if sum_col:
-        cols_out[sum_col] = [v[1] for _, v in rows]
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_count_matview(
@@ -301,8 +251,6 @@ def maintain_cm_matview(
         merge_counts(
             spark, exploded, state_path, [*keys, "row", "col"], None,
             batch_id,
-            # cm cells are keys x depth x width — geometry-bounded
-            bounded_state=True,
         )
 
     return (
@@ -353,19 +301,15 @@ def merge_distinct_sketches(
     replay would converge even without the batch-id sidecar; the
     sidecar still skips the wasted work.
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(
         F.hll_sketch_agg(distinct_col, F.lit(int(lg_k))).alias("sketch"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = (
             prev.unionByName(partial)
@@ -378,11 +322,7 @@ def merge_distinct_sketches(
     else:
         merged = partial
 
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_distinct_matview(
@@ -449,16 +389,12 @@ def merge_topk_summary(
     TakeOrdered — never an unbounded collect.  Crash-safety is the same
     rename-aside swap + batch-id sidecar as ``merge_counts``.
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(F.count(F.lit(1)).alias("weight"))
 
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = (
             prev.unionByName(partial)
@@ -477,11 +413,7 @@ def merge_topk_summary(
             *keys, (F.col("weight") - F.lit(threshold)).alias("weight")
         ).filter(F.col("weight") > 0)
 
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_topk_matview(
@@ -547,11 +479,8 @@ def merge_quantile_sketches(
     aggregates): no Python, no UDF, map-side partial sketches before
     the key shuffle.
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(
         F.kll_sketch_agg_double(
@@ -560,8 +489,7 @@ def merge_quantile_sketches(
         F.count(value_col).alias("n_rows"),
     )
 
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = (
             prev.unionByName(partial)
@@ -576,11 +504,7 @@ def merge_quantile_sketches(
     else:
         merged = partial
 
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_quantile_matview(
@@ -676,44 +600,7 @@ def _corr_expr_bundle(cols: tuple):
             ]
         )
     ).alias("__r")
-    prev_select = [
-        F.col(c).alias(f"p_{c}")
-        for c in ("n", "mean_a", "mean_b", "m2a", "m2b", "cab")
-    ]
-    nA = F.coalesce(F.col("p_n"), F.lit(0)).cast("double")
-    nB = F.coalesce(F.col("n"), F.lit(0)).cast("double")
-    n = nA + nB
-    mA_a = F.coalesce(F.col("p_mean_a"), F.lit(0.0))
-    mB_a = F.coalesce(F.col("mean_a"), F.lit(0.0))
-    mA_b = F.coalesce(F.col("p_mean_b"), F.lit(0.0))
-    mB_b = F.coalesce(F.col("mean_b"), F.lit(0.0))
-    d_a = mB_a - mA_a
-    d_b = mB_b - mA_b
-    w = F.when(n > 0, nA * nB / n).otherwise(F.lit(0.0))
-    merged_select = [
-        (nA + nB).cast("long").alias("n"),
-        # when one side is empty its mean coalesces to 0 but its
-        # weight (nA or nB) is 0, so the formulas degrade exactly
-        # to the other side
-        F.when(n > 0, mA_a + d_a * nB / n).alias("mean_a"),
-        F.when(n > 0, mA_b + d_b * nB / n).alias("mean_b"),
-        (
-            F.coalesce(F.col("p_m2a"), F.lit(0.0))
-            + F.coalesce(F.col("m2a"), F.lit(0.0))
-            + d_a * d_a * w
-        ).alias("m2a"),
-        (
-            F.coalesce(F.col("p_m2b"), F.lit(0.0))
-            + F.coalesce(F.col("m2b"), F.lit(0.0))
-            + d_b * d_b * w
-        ).alias("m2b"),
-        (
-            F.coalesce(F.col("p_cab"), F.lit(0.0))
-            + F.coalesce(F.col("cab"), F.lit(0.0))
-            + d_a * d_b * w
-        ).alias("cab"),
-    ]
-    return aggs, explode_col, prev_select, merged_select
+    return aggs, explode_col
 
 
 def merge_corr_moments(
@@ -740,21 +627,16 @@ def merge_corr_moments(
     pairwise-complete null masking (the same contract as
     ``operators/analytics.py:correlation_matrix``); the state holds
     one row per unordered pair — bounded by |cols|^2, metadata-sized —
-    and the merge is a tiny full-outer join applying the formulas.
+    and the merge applies the formulas per pair on the driver.
     Crash-safe via the shared sidecar swap; replay of an applied
     batch id is a no-op.
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     cols = list(cols)
     if len(set(cols)) != len(cols):
         raise ValueError(f"merge_corr_moments: duplicate columns in {cols}")
-    aggs, explode_col, _prev_select, _merged_select = _corr_expr_bundle(
-        tuple(cols)
-    )
+    aggs, explode_col = _corr_expr_bundle(tuple(cols))
     partial = (
         batch.agg(*aggs)
         .select(explode_col)
@@ -762,11 +644,10 @@ def merge_corr_moments(
         .filter(F.col("n") > 0)
     )
     # The batch pass (data-sized) stays one Spark aggregate; the state
-    # is bounded at |cols|^2 pair rows, so the Chan merge runs
-    # driver-side (guide §5, the merge_drift_counts pattern).  The
-    # Python formulas below mirror the _corr_expr_bundle merge
-    # expressions OP FOR OP (same IEEE ops, same association), so the
-    # folded state is bit-identical to the full-outer-join form.
+    # is bounded at |cols|^2 pair rows whatever the data, so the Chan
+    # merge runs driver-side (the merge_drift_counts pattern).  An
+    # empty side has weight 0, so the formulas degrade exactly to the
+    # other side.
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -775,8 +656,7 @@ def merge_corr_moments(
         (r["col_a"], r["col_b"]): [r[c] for c in vcols]
         for r in partial.collect()
     }
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
         pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
         for i in range(prev.num_rows):
@@ -817,14 +697,7 @@ def merge_corr_moments(
             [v[j] for _, v in rows], type=pa.float64()
         )
     table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, lambda tmp: _write_arrow(table, tmp))
 
 
 def maintain_corr_matview(
@@ -876,7 +749,6 @@ def merge_calibration_state(
     label_col: str,
     bins: int,
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Merge one batch's (group, bin) calibration sums into state.
 
@@ -886,99 +758,29 @@ def merge_calibration_state(
     ``merge_counts``, with the same batch-id idempotence sidecar.
     The binning expression is ``ops/classifier_eval._binned`` itself,
     so stream and batch can never disagree on bin boundaries.
-
-    ``bounded_state=True`` declares the GROUP-key space bounded (the
-    bin axis always is) so the state fold may run driver-side via
-    Arrow (the ``merge_counts`` convention): one long add + three
-    two-operand IEEE adds per (group, bin), bit-exact in any engine
-    and operand order.  Leave False for group keys that grow with the
-    data (per-user calibration at 100 TB): the fold then stays a
-    distributed union + re-aggregate (guide §5: the driver does no
-    DATA work, and "bounded by geometry" holds only when the key
-    space is bounded — VERDICT r14 #2).
     """
     from recover_spark.ops.classifier_eval import _binned
 
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(group_cols)
     partial = _binned(
         batch, keys, score_col, label_col, bins, "calibration_matview"
     )
-    state = Path(state_path)
-    if not bounded_state:
-        merged = partial
-        if state.exists():
-            prev = spark.read.parquet(state_path)
-            merged = (
-                prev.unionByName(partial)
-                .groupBy(*keys, "bin")
-                .agg(
-                    F.sum("n_bin").cast("long").alias("n_bin"),
-                    F.sum("__ss").alias("__ss"),
-                    F.sum("__sy").alias("__sy"),
-                    F.sum("__sq").alias("__sq"),
-                )
+    merged = partial
+    if Path(state_path).exists():
+        prev = spark.read.parquet(state_path)
+        merged = (
+            prev.unionByName(partial)
+            .groupBy(*keys, "bin")
+            .agg(
+                F.sum("n_bin").cast("long").alias("n_bin"),
+                F.sum("__ss").alias("__ss"),
+                F.sum("__sy").alias("__sy"),
+                F.sum("__sq").alias("__sq"),
             )
-        tmp = str(state) + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if batch_id is not None:
-            (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-        _swap_state(tmp, state_path)
-        return
-    # bounded_state=True: the batch binning (data-sized) stays one
-    # Spark aggregate; the state is bounded at groups x bins, so the
-    # fold runs driver-side via Arrow (guide §5, the
-    # merge_drift_counts pattern): one long add + three two-operand
-    # IEEE adds per (group, bin) — bit-exact in any engine and
-    # operand order.
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    vcols = ("n_bin", "__ss", "__sy", "__sq")
-    acc: dict[tuple, list] = {
-        tuple(r[c] for c in keys) + (int(r["bin"]),): [r[c] for c in vcols]
-        for r in partial.collect()
-    }
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
-        for i in range(prev.num_rows):
-            kk = tuple(pc[c][i] for c in keys) + (int(pc["bin"][i]),)
-            row = acc.get(kk)
-            if row is None:
-                acc[kk] = [pc[c][i] for c in vcols]
-            else:
-                for j, c in enumerate(vcols):
-                    a, b = row[j], pc[c][i]
-                    row[j] = b if a is None else (a if b is None else a + b)
-    rows = sorted(acc.items(), key=lambda kv: tuple(map(str, kv[0])))
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [kk[j] for kk, _ in rows])
-    cols_out["bin"] = pa.array(
-        [kk[len(keys)] for kk, _ in rows], type=pa.int32()
-    )
-    cols_out["n_bin"] = pa.array(
-        [int(v[0]) for _, v in rows], type=pa.int64()
-    )
-    for j, c in enumerate(vcols[1:], start=1):
-        cols_out[c] = pa.array(
-            [v[j] for _, v in rows], type=pa.float64()
         )
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_calibration_matview(
@@ -989,7 +791,6 @@ def maintain_calibration_matview(
     score_col: str,
     label_col: str,
     bins: int = 10,
-    bounded_state: bool = False,
 ):
     """Incrementally-maintained classifier-calibration view: each
     micro-batch folds its (group, bin) score/label sums into persisted
@@ -1004,7 +805,7 @@ def maintain_calibration_matview(
     def _merge(batch: DataFrame, batch_id: int) -> None:
         merge_calibration_state(
             spark, batch, state_path, keys, score_col, label_col,
-            bins, batch_id, bounded_state=bounded_state,
+            bins, batch_id,
         )
 
     return (
@@ -1117,24 +918,13 @@ def merge_heartbeat_state(
     key_cols: Sequence[str],
     ts_col: str,
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Merge one batch's per-key (last_seen, n_rows) into state — max
     and count are both mergeable, so the union + re-aggregate over
     partials equals the aggregate over everything seen (the
-    ``merge_counts`` contract with the same batch-id sidecar).
-
-    ``bounded_state=True`` (r14 optimization) declares the key space
-    GEOMETRY-bounded so the state fold may run driver-side via Arrow
-    (the ``merge_counts`` pattern): the fold is max over epoch-micros
-    integers plus one integer add per key — engine-independent — and
-    the batch aggregate (the data work) stays a Spark pass.  Leave
-    False for key spaces that grow with the data."""
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    ``merge_counts`` contract with the same batch-id sidecar)."""
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     partial = (
         batch.filter(F.col(ts_col).isNotNull())
@@ -1144,12 +934,8 @@ def merge_heartbeat_state(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
         )
     )
-    state = Path(state_path)
-    if bounded_state:
-        _merge_heartbeat_driver(partial, state_path, keys, batch_id)
-        return
     merged = partial
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = (
             prev.unionByName(partial)
@@ -1159,76 +945,7 @@ def merge_heartbeat_state(
                 F.sum("n_rows").cast("long").alias("n_rows"),
             )
         )
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
-
-
-def _merge_heartbeat_driver(
-    partial: DataFrame,
-    state_path: str,
-    keys: list,
-    batch_id: int | None,
-) -> None:
-    """Driver-side Arrow fold of a GEOMETRY-BOUNDED heartbeat state.
-
-    Timestamps fold as epoch MICROS integers (max is order-preserving
-    under the exact ``unix_micros`` conversion, and the state column
-    is written back as ``timestamp[us, UTC]`` so Spark reads the
-    identical TIMESTAMP the distributed fold would have produced —
-    the read lens's ``unix_micros(last_seen)`` sees the same
-    integer)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows_in = partial.select(
-        *keys,
-        F.unix_micros(F.col("last_seen")).alias("__us"),
-        "n_rows",
-    ).collect()
-    acc: dict[tuple, list] = {
-        tuple(r[c] for c in keys): [r["__us"], r["n_rows"]]
-        for r in rows_in
-    }
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        ts_arr = prev.column("last_seen")
-        t = ts_arr.type
-        ints = ts_arr.cast(pa.int64()).to_pylist()
-        if pa.types.is_timestamp(t) and t.unit == "ns":
-            ints = [None if v is None else v // 1000 for v in ints]
-        pc = {c: prev.column(c).to_pylist() for c in keys + ["n_rows"]}
-        for i in range(prev.num_rows):
-            kk = tuple(pc[c][i] for c in keys)
-            row = acc.get(kk)
-            if row is None:
-                acc[kk] = [ints[i], pc["n_rows"][i]]
-            else:
-                a, b = row[0], ints[i]
-                row[0] = b if a is None else (a if b is None else max(a, b))
-                row[1] = row[1] + pc["n_rows"][i]
-    rows = sorted(acc.items(), key=lambda kv: tuple(map(str, kv[0])))
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [kk[j] for kk, _ in rows])
-    cols_out["last_seen"] = pa.array(
-        [v[0] for _, v in rows], type=pa.timestamp("us", tz="UTC")
-    )
-    cols_out["n_rows"] = pa.array(
-        [int(v[1]) for _, v in rows], type=pa.int64()
-    )
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_heartbeat_matview(
@@ -1237,7 +954,6 @@ def maintain_heartbeat_matview(
     checkpoint_path: str,
     key_cols: Sequence[str],
     ts_col: str = "ts",
-    bounded_state: bool = False,
 ):
     """Incrementally-maintained per-key HEARTBEAT view: who has been
     seen, when last, how often — the live complement to
@@ -1249,8 +965,7 @@ def maintain_heartbeat_matview(
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         merge_heartbeat_state(
-            spark, batch, state_path, keys, ts_col, batch_id,
-            bounded_state=bounded_state,
+            spark, batch, state_path, keys, ts_col, batch_id
         )
 
     return (
@@ -1320,17 +1035,13 @@ def merge_upsert_state(
     """
     from pyspark.sql import Window
 
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     order = list(order_cols)
 
     fresh = batch
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         fresh = spark.read.parquet(state_path).unionByName(batch)
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).desc() for c in order]
@@ -1341,11 +1052,7 @@ def merge_upsert_state(
         .drop("__rn")
     )
 
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_upsert_matview(
@@ -1408,97 +1115,23 @@ def merge_vector_sums(
     vec_col: str,
     dim: int,
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Merge one batch's per-key vector SUMS (+ row count) into state —
     the mergeable sufficient statistic for any centroid lens: sums add
     across batches exactly, so the folded state equals one aggregate
     over all rows seen, and state size stays O(keys x dim) forever.
     Same crash-replay contract as ``merge_counts`` (batch-id marker
-    travels inside the atomically-swapped state dir).
-
-    ``bounded_state=True`` declares the KEY space bounded (a handful
-    of cohorts/eras, not per-user keys) so the state fold may run
-    driver-side via Arrow — one two-operand IEEE add per component,
-    bit-identical in any engine and operand order.  Default False
-    keeps the fold a distributed union + re-aggregate: the state is
-    O(distinct keys x dim), which is data-dependent (guide §5;
-    VERDICT r14 #2)."""
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    travels inside the atomically-swapped state dir)."""
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     partial_aggs, merge_aggs = _vector_expr_bundle(vec_col, int(dim))
     partial = batch.groupBy(*keys).agg(*partial_aggs)
-    if not bounded_state:
-        state = Path(state_path)
-        if state.exists():
-            prev = spark.read.parquet(state_path)
-            merged = (
-                prev.unionByName(partial).groupBy(*keys).agg(*merge_aggs)
-            )
-        else:
-            merged = partial
-        tmp = str(state) + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if batch_id is not None:
-            (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-        _swap_state(tmp, state_path)
-        return
-    # bounded_state=True: the batch pass (data-sized) stays one Spark
-    # aggregate; its RESULT is O(keys x dim), so the state merge is
-    # driver-side metadata work (guide §5, the merge_drift_counts /
-    # merge_bootstrap_state pattern): per key the fold is one
-    # two-operand IEEE add per component — bit-identical in any
-    # engine and operand order — replacing the per-batch prev-scan +
-    # shuffle + committer round.
-    scols = [f"s{i}" for i in range(int(dim))]
-    acc: dict[tuple, list] = {
-        tuple(r[c] for c in keys): [int(r["n_rows"])]
-        + [float(r[c]) if r[c] is not None else None for c in scols]
-        for r in partial.collect()
-    }
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
-        for i in range(prev.num_rows):
-            k = tuple(pc[c][i] for c in keys)
-            row = acc.get(k)
-            if row is None:
-                acc[k] = [int(pc["n_rows"][i])] + [
-                    pc[c][i] for c in scols
-                ]
-            else:
-                row[0] += int(pc["n_rows"][i])
-                for j, c in enumerate(scols, start=1):
-                    a, b = row[j], pc[c][i]
-                    row[j] = b if a is None else (a if b is None else a + b)
-    rows = sorted(acc.items())
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [k[j] for k, _ in rows])
-    cols_out["n_rows"] = pa.array(
-        [v[0] for _, v in rows], type=pa.int64()
-    )
-    for j, c in enumerate(scols, start=1):
-        cols_out[c] = pa.array(
-            [v[j] for _, v in rows], type=pa.float64()
-        )
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    merged = partial
+    if Path(state_path).exists():
+        prev = spark.read.parquet(state_path)
+        merged = prev.unionByName(partial).groupBy(*keys).agg(*merge_aggs)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_vector_matview(
@@ -1508,7 +1141,6 @@ def maintain_vector_matview(
     key_cols: Sequence[str],
     vec_col: str,
     dim: int,
-    bounded_state: bool = False,
 ):
     """One availableNow increment of the per-key vector-sum view."""
     spark = stream.sparkSession
@@ -1516,8 +1148,7 @@ def maintain_vector_matview(
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         merge_vector_sums(
-            spark, batch, state_path, keys, vec_col, dim, batch_id,
-            bounded_state=bounded_state,
+            spark, batch, state_path, keys, vec_col, dim, batch_id
         )
 
     return (
@@ -1601,7 +1232,6 @@ def merge_sample_state(
     k: int = 16,
     salt: str = "bksample",
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Fold one batch into a per-key BOTTOM-K uniform sample state —
     the streaming twin of ``ops/kmv.py``: the sketch members carry
@@ -1624,23 +1254,13 @@ def merge_sample_state(
     total, independent of stream length.  The micro-batch contributes
     its own bottom-k partial first (a rank-filter over the bounded
     batch), so the union never exceeds prev-k + batch-k rows per key.
-
-    ``bounded_state=True`` declares the KEY space bounded so the state
-    fold may run driver-side via Arrow (pure set logic — min-k on a
-    fixed hash, no float arithmetic, bit-identical to the distributed
-    union + rank form).  Default False keeps the fold distributed:
-    O(keys x k) state is data-dependent in the key count (guide §5;
-    VERDICT r14 #2).
     """
     from pyspark.sql import Window
 
     from recover_spark.functions.hashing import portable_hash64
 
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     w = Window.partitionBy(*keys).orderBy("h")
     partial = (
@@ -1655,69 +1275,17 @@ def merge_sample_state(
         .drop("__rn")
     )
 
-    if not bounded_state:
-        state = Path(state_path)
-        if state.exists():
-            prev = spark.read.parquet(state_path)
-            merged = (
-                prev.unionByName(partial)
-                .dropDuplicates(keys + ["h"])
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= k)
-                .drop("__rn")
-            )
-        else:
-            merged = partial
-        tmp = str(state) + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if batch_id is not None:
-            (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-        _swap_state(tmp, state_path)
-        return
-    # bounded_state=True: the batch's own bottom-k partial
-    # (data-sized) stays a Spark pass; the state fold is bounded at
-    # k rows per key, so it runs driver-side via Arrow (guide §5, the
-    # merge_drift_counts pattern): min-k on a fixed hash is pure set
-    # logic — no float arithmetic at all — so the folded state is
-    # bit-identical to the union + rank form it replaces.
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    acc: dict[tuple, dict] = {}
-    for r in partial.collect():
-        kk = tuple(r[c] for c in keys)
-        acc.setdefault(kk, {})[int(r["h"])] = r["payload"]
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
-        for i in range(prev.num_rows):
-            kk = tuple(pc[c][i] for c in keys)
-            # same (keys, h) ⇒ same payload (h is the payload's hash);
-            # keep the stored one, matching dropDuplicates' keep-one
-            acc.setdefault(kk, {}).setdefault(
-                int(pc["h"][i]), pc["payload"][i]
-            )
-    out_rows = []
-    for kk in sorted(acc, key=lambda t: tuple(map(str, t))):
-        members = sorted(acc[kk].items())[: int(k)]
-        out_rows.extend((kk, h, p) for h, p in members)
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [kk[j] for kk, _, _ in out_rows])
-    cols_out["payload"] = [p for _, _, p in out_rows]
-    cols_out["h"] = pa.array(
-        [h for _, h, _ in out_rows], type=pa.int64()
-    )
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    merged = partial
+    if Path(state_path).exists():
+        merged = (
+            spark.read.parquet(state_path)
+            .unionByName(partial)
+            .dropDuplicates(keys + ["h"])
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .drop("__rn")
+        )
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_sample_matview(
@@ -1728,7 +1296,6 @@ def maintain_sample_matview(
     payload_col: str,
     k: int = 16,
     salt: str = "bksample",
-    bounded_state: bool = False,
 ):
     """availableNow increment of the bottom-k sample view."""
     spark = stream.sparkSession
@@ -1737,7 +1304,7 @@ def maintain_sample_matview(
     def _merge(batch: DataFrame, batch_id: int) -> None:
         merge_sample_state(
             spark, batch, state_path, keys, payload_col, k, salt,
-            batch_id, bounded_state=bounded_state,
+            batch_id,
         )
 
     return (
@@ -1826,7 +1393,6 @@ def merge_bootstrap_state(
     n_replicates: int,
     salt: str = "boot",
     batch_id: int | None = None,
-    bounded_state: bool = False,
 ) -> None:
     """Fold one batch's Poisson-bootstrap replicate partials into the
     state table.  The state is (keys, replicate) -> (weighted sum,
@@ -1836,23 +1402,13 @@ def merge_bootstrap_state(
     CI equals the batch CI up to float merge order, with state
     bounded at (distinct keys x n_replicates) regardless of rows.
     Same effectively-once batch-id sidecar as merge_counts.
-
-    ``bounded_state=True`` declares the KEY space bounded so the
-    state fold may run driver-side via Arrow (one two-operand IEEE
-    add per sum, bit-identical in any engine and operand order).
-    Default False keeps the fold distributed: the replicate axis is
-    fixed but distinct keys are data-dependent (guide §5; VERDICT
-    r14 #2).
     """
     from recover_spark.operators.analytics import (
         bootstrap_replicate_partials,
     )
 
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     keys = list(key_cols)
     # The replicate fan-out is n_replicates x the batch's rows of
     # MAP-side work, so unlike the counter matviews this merge is
@@ -1868,87 +1424,19 @@ def merge_bootstrap_state(
     partial = bootstrap_replicate_partials(
         batch, keys, value_col, row_key_col, n_replicates, salt
     )
-    if not bounded_state:
-        state = Path(state_path)
-        if state.exists():
-            prev = spark.read.parquet(state_path)
-            partial = (
-                prev.unionByName(partial)
-                .groupBy(*keys, "__rep")
-                .agg(
-                    F.sum("__ws").alias("__ws"),
-                    F.sum("__wn").alias("__wn"),
-                    F.sum("__s").alias("__s"),
-                    F.sum("__c").alias("__c"),
-                )
+    if Path(state_path).exists():
+        prev = spark.read.parquet(state_path)
+        partial = (
+            prev.unionByName(partial)
+            .groupBy(*keys, "__rep")
+            .agg(
+                F.sum("__ws").alias("__ws"),
+                F.sum("__wn").alias("__wn"),
+                F.sum("__s").alias("__s"),
+                F.sum("__c").alias("__c"),
             )
-        tmp = str(state) + ".tmp"
-        partial.write.mode("overwrite").parquet(tmp)
-        if batch_id is not None:
-            (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-        _swap_state(tmp, state_path)
-        return
-    # bounded_state=True: the batch pass (data-sized, the replicate
-    # fan-out) stays one Spark aggregate; its RESULT is bounded at
-    # (keys x replicates), so the state merge is driver-side metadata
-    # work (guide §5, the merge_drift_counts pattern): per (keys, rep)
-    # the fold adds the state row to the batch row — ONE two-operand
-    # IEEE add per sum, bit-identical in any engine and in either
-    # operand order — which replaces the per-batch prev-scan +
-    # shuffle + committer round.
-    acc: dict[tuple, list] = {
-        tuple(r[c] for c in keys) + (int(r["__rep"]),): [
-            float(r["__ws"]),
-            float(r["__wn"]),
-            float(r["__s"]),
-            int(r["__c"]),
-        ]
-        for r in partial.collect()
-    }
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    state = Path(state_path)
-    if state.exists():
-        prev = pq.read_table(state_path)  # '_'-prefixed sidecars skipped
-        pc = {c: prev.column(c).to_pylist() for c in prev.column_names}
-        for i in range(prev.num_rows):
-            k = tuple(pc[c][i] for c in keys) + (int(pc["__rep"][i]),)
-            row = acc.get(k)
-            if row is None:
-                acc[k] = [
-                    float(pc["__ws"][i]),
-                    float(pc["__wn"][i]),
-                    float(pc["__s"][i]),
-                    int(pc["__c"][i]),
-                ]
-            else:
-                row[0] += float(pc["__ws"][i])
-                row[1] += float(pc["__wn"][i])
-                row[2] += float(pc["__s"][i])
-                row[3] += int(pc["__c"][i])
-    rows = sorted(acc.items())
-    cols_out: dict = {}
-    for j, c in enumerate(keys):
-        cols_out[c] = _pa_key_array(pa, partial, c, [k[j] for k, _ in rows])
-    cols_out["__rep"] = pa.array(
-        [k[len(keys)] for k, _ in rows], type=pa.int32()
-    )
-    cols_out["__ws"] = pa.array([v[0] for _, v in rows], type=pa.float64())
-    cols_out["__wn"] = pa.array([v[1] for _, v in rows], type=pa.float64())
-    cols_out["__s"] = pa.array([v[2] for _, v in rows], type=pa.float64())
-    cols_out["__c"] = pa.array([v[3] for _, v in rows], type=pa.int64())
-    table = pa.table(cols_out)
-    tmp = str(state) + ".tmp"
-    if Path(tmp).exists():
-        import shutil as _shutil
-
-        _shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+        )
+    _commit_state(state_path, batch_id, partial.write.parquet)
 
 
 def maintain_bootstrap_matview(
@@ -1960,7 +1448,6 @@ def maintain_bootstrap_matview(
     row_key_col: str,
     n_replicates: int = 40,
     salt: str = "boot",
-    bounded_state: bool = False,
 ):
     """availableNow increment of the bootstrap-CI materialized view."""
     spark = stream.sparkSession
@@ -1977,7 +1464,6 @@ def maintain_bootstrap_matview(
             n_replicates,
             salt,
             batch_id,
-            bounded_state=bounded_state,
         )
 
     return (
@@ -2060,11 +1546,8 @@ def merge_sequence_state(
     growing state (refuse-to-degrade).  Same crash-replay idempotence
     as every matview here (batch-id sidecar inside the atomic swap).
     """
-    _recover_state(state_path)
-    if batch_id is not None:
-        applied = _applied_batch_id(state_path)
-        if applied is not None and batch_id <= applied:
-            return
+    if _replayed(state_path, batch_id):
+        return
     enc, ev = _sequence_expr_bundle(
         ts_col, type_col, tuple(sorted(alphabet.items())),
         tuple(tiebreakers),
@@ -2102,8 +1585,7 @@ def merge_sequence_state(
         )
     )
 
-    state = Path(state_path)
-    if state.exists():
+    if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = (
             prev.unionByName(partial)
@@ -2130,11 +1612,7 @@ def merge_sequence_state(
             )
         ),
     )
-    tmp = str(state) + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
+    _commit_state(state_path, batch_id, merged.write.parquet)
 
 
 def maintain_pattern_matview(

@@ -807,6 +807,44 @@ class TestMmrRerank:
                 k=2, max_candidates=10,
             )
 
+    def _counted_cands(self, spark, rows):
+        """Candidates whose source rows pass through an accumulator;
+        returns (frame, accumulator)."""
+        reads = spark.sparkContext.accumulator(0)
+
+        def counted(row):
+            reads.add(1)
+            return row
+
+        src = spark.sparkContext.parallelize(rows, 2).map(counted)
+        return spark.createDataFrame(
+            src, "q long, d long, rel double, v array<double>"
+        ), reads
+
+    def test_over_cap_refused_without_pinned_rdds(self, spark):
+        """The refusal must not leave the over-cap candidate set stored
+        in executor block storage."""
+        from recover_spark.ops.retrieval import mmr_rerank
+
+        rows = [(0, d, 0.5, [1.0, float(d)]) for d in range(30)]
+        cands, _ = self._counted_cands(spark, rows)
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        with pytest.raises(ValueError, match="max_candidates"):
+            mmr_rerank(cands, "q", "d", "rel", "v", k=2, max_candidates=10)
+        assert set(jsc.getPersistentRDDs().keys()) <= before
+
+    def test_under_cap_runs_upstream_once(self, spark):
+        from recover_spark.ops.retrieval import mmr_rerank
+
+        rows = [(0, d, 1.0 / d, [1.0, float(d)]) for d in range(1, 9)]
+        cands, reads = self._counted_cands(spark, rows)
+        out = mmr_rerank(
+            cands, "q", "d", "rel", "v", k=3, max_candidates=100
+        ).collect()
+        assert sorted(r["rank"] for r in out) == [1, 2, 3]
+        assert reads.value == len(rows)
+
 
 class TestLabelPropagation:
     def _edges(self, spark, pairs):

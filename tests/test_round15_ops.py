@@ -1,13 +1,11 @@
 """Round-15 optimization tests.
 
-The four formerly-unconditional driver-side Arrow folds
-(calibration / vector-sum / bottom-k sample / bootstrap matviews) are
-now gated behind ``bounded_state`` with the distributed union +
-re-aggregate as the default (VERDICT r14 #2).  Each test folds the
-same multi-batch stream through BOTH modes and asserts the persisted
-state schema and the read-lens output are identical — the contract
-that lets bench call sites opt in without changing what any query
-computes.
+``TestBoundedStateGates`` pins four streaming matview families
+(calibration / vector-sum / bottom-k sample / bootstrap), whose state is
+bounded by keys x a fixed axis, to their one distributed fold: a
+multi-batch stream folds to a read lens equal to the family's batch
+operator over the union of all batches, a replay of the last batch id
+is a no-op, and the persisted state schema is pinned.
 """
 
 import pytest
@@ -24,8 +22,25 @@ def _state_schema(spark, path):
     return [f.simpleString() for f in spark.read.parquet(path).schema]
 
 
+def _fold(spark, merge, batches, schema, state):
+    """Fold ``batches`` (row lists) through ``merge(df, batch_id)``, then
+    replay the last batch id.  Returns the state's (schema, rows) before
+    and after the replay, and the union of all batches."""
+    frames = [spark.createDataFrame(rows, schema) for rows in batches]
+    for i, df in enumerate(frames):
+        merge(df, i)
+    before = (_state_schema(spark, state), _lens_rows(spark.read.parquet(state)))
+    merge(frames[-1], len(frames) - 1)
+    after = (_state_schema(spark, state), _lens_rows(spark.read.parquet(state)))
+    union = frames[0]
+    for df in frames[1:]:
+        union = union.unionByName(df)
+    return before, after, union
+
+
 class TestBoundedStateGates:
     def test_calibration_fold_equals_distributed(self, spark, tmp_path):
+        from recover_spark.ops.classifier_eval import calibration_summary
         from recover_spark.streaming.matview import (
             merge_calibration_state,
             read_calibration_matview,
@@ -36,71 +51,64 @@ class TestBoundedStateGates:
             [("a", 0.52, 1), ("b", 0.45, 1), ("c", 0.99, 1)],
             [("a", 0.11, 0)],
         ]
-        states = {}
-        for label, bounded in (("dist", False), ("arrow", True)):
-            state = str(tmp_path / f"cal_{label}")
-            for i, rows in enumerate(batches):
-                df = spark.createDataFrame(
-                    rows, "g string, score double, label int"
-                )
-                merge_calibration_state(
-                    spark, df, state, ["g"], "score", "label", 10,
-                    batch_id=i, bounded_state=bounded,
-                )
-            # replay of the last batch must be a no-op in both modes
-            df = spark.createDataFrame(
-                batches[-1], "g string, score double, label int"
-            )
-            merge_calibration_state(
-                spark, df, state, ["g"], "score", "label", 10,
-                batch_id=len(batches) - 1, bounded_state=bounded,
-            )
-            out = read_calibration_matview(spark, state, ["g"])
-            states[label] = (
-                _state_schema(spark, state), _lens_rows(out)
-            )
-        assert states["dist"] == states["arrow"]
+        state = str(tmp_path / "cal")
+        before, after, union = _fold(
+            spark,
+            lambda df, i: merge_calibration_state(
+                spark, df, state, ["g"], "score", "label", 10, batch_id=i
+            ),
+            batches,
+            "g string, score double, label int",
+            state,
+        )
+        assert after == before
+        assert before[0] == [
+            "g:string", "bin:int", "n_bin:bigint",
+            "__ss:double", "__sy:double", "__sq:double",
+        ]
+        assert _lens_rows(read_calibration_matview(spark, state, ["g"])) == (
+            _lens_rows(calibration_summary(union, ["g"], "score", "label"))
+        )
 
     def test_vector_fold_equals_distributed(self, spark, tmp_path):
+        from recover_spark.ops.clustering import embedding_centroid_drift
         from recover_spark.streaming.matview import (
             merge_vector_sums,
             read_embedding_drift_matview,
         )
 
         dim = 4
-
-        def emb(rows):
-            return spark.createDataFrame(
-                rows, "label string, era int, embedding array<double>"
-            )
-
         batches = [
             [("x", 0, [1.0, 2.0, 3.0, 4.0]), ("x", 1, [1.1, 2.2, 2.9, 4.0])],
             [("x", 0, [0.5, 0.5, 0.5, 0.5]), ("y", 0, [9.0, 0.0, 0.0, 1.0])],
             [("y", 1, [8.5, 0.3, 0.0, 1.2])],
         ]
-        states = {}
-        for label, bounded in (("dist", False), ("arrow", True)):
-            state = str(tmp_path / f"vec_{label}")
-            for i, rows in enumerate(batches):
-                merge_vector_sums(
-                    spark, emb(rows), state, ["label", "era"],
-                    "embedding", dim, batch_id=i, bounded_state=bounded,
-                )
-            merge_vector_sums(  # replay no-op
-                spark, emb(batches[-1]), state, ["label", "era"],
-                "embedding", dim, batch_id=len(batches) - 1,
-                bounded_state=bounded,
-            )
-            out = read_embedding_drift_matview(
-                spark, state, "label", "era", dim
-            )
-            states[label] = (
-                _state_schema(spark, state), _lens_rows(out)
-            )
-        assert states["dist"] == states["arrow"]
+        state = str(tmp_path / "vec")
+        before, after, union = _fold(
+            spark,
+            lambda df, i: merge_vector_sums(
+                spark, df, state, ["label", "era"], "embedding", dim,
+                batch_id=i,
+            ),
+            batches,
+            "label string, era int, embedding array<double>",
+            state,
+        )
+        assert after == before
+        assert before[0] == [
+            "label:string", "era:int", "n_rows:bigint",
+            *[f"s{i}:double" for i in range(dim)],
+        ]
+        streamed = read_embedding_drift_matview(
+            spark, state, "label", "era", dim
+        )
+        batch = embedding_centroid_drift(
+            union, "label", F.col("era"), dim=dim
+        )
+        assert _lens_rows(streamed) == _lens_rows(batch)
 
     def test_sample_fold_equals_distributed(self, spark, tmp_path):
+        from recover_spark.ops.kmv import kmv_sketch
         from recover_spark.streaming.matview import (
             merge_sample_state,
             read_sample_matview,
@@ -111,27 +119,32 @@ class TestBoundedStateGates:
             [("a", i) for i in range(15, 40)] + [("c", 1)],
             [("b", i) for i in range(100, 130)],
         ]
-        states = {}
-        for label, bounded in (("dist", False), ("arrow", True)):
-            state = str(tmp_path / f"samp_{label}")
-            for i, rows in enumerate(batches):
-                df = spark.createDataFrame(rows, "g string, v long")
-                merge_sample_state(
-                    spark, df, state, ["g"], "v", k=8,
-                    batch_id=i, bounded_state=bounded,
-                )
-            df = spark.createDataFrame(batches[-1], "g string, v long")
-            merge_sample_state(  # replay no-op
-                spark, df, state, ["g"], "v", k=8,
-                batch_id=len(batches) - 1, bounded_state=bounded,
-            )
-            out = read_sample_matview(spark, state)
-            states[label] = (
-                _state_schema(spark, state), _lens_rows(out)
-            )
-        assert states["dist"] == states["arrow"]
+        state = str(tmp_path / "samp")
+        before, after, union = _fold(
+            spark,
+            lambda df, i: merge_sample_state(
+                spark, df, state, ["g"], "v", k=8, batch_id=i
+            ),
+            batches,
+            "g string, v long",
+            state,
+        )
+        assert after == before
+        assert before[0] == ["g:string", "payload:string", "h:bigint"]
+        streamed = {}
+        for r in read_sample_matview(spark, state).collect():
+            streamed.setdefault(r["g"], []).append((r["rank"], r["h"]))
+        # the bottom-k members ARE the batch KMV sketch of the payloads
+        batch = kmv_sketch(
+            union.select("g", F.col("v").cast("string").alias("payload")),
+            ["g"], "payload", k=8, salt="bksample",
+        )
+        assert {
+            g: [h for _, h in sorted(m)] for g, m in streamed.items()
+        } == {r["g"]: list(r["kmv"]) for r in batch.collect()}
 
     def test_bootstrap_fold_equals_distributed(self, spark, tmp_path):
+        from recover_spark.operators.analytics import bootstrap_ci
         from recover_spark.streaming.matview import (
             merge_bootstrap_state,
             read_bootstrap_matview,
@@ -143,29 +156,24 @@ class TestBoundedStateGates:
             + [("q", i, 100.0 - i) for i in range(25)],
             [("q", i, 50.0 + i) for i in range(25, 40)],
         ]
-        states = {}
-        for label, bounded in (("dist", False), ("arrow", True)):
-            state = str(tmp_path / f"boot_{label}")
-            for i, rows in enumerate(batches):
-                df = spark.createDataFrame(
-                    rows, "g string, rk long, v double"
-                )
-                merge_bootstrap_state(
-                    spark, df, state, ["g"], "v", "rk", 8,
-                    batch_id=i, bounded_state=bounded,
-                )
-            df = spark.createDataFrame(
-                batches[-1], "g string, rk long, v double"
-            )
-            merge_bootstrap_state(  # replay no-op
-                spark, df, state, ["g"], "v", "rk", 8,
-                batch_id=len(batches) - 1, bounded_state=bounded,
-            )
-            out = read_bootstrap_matview(spark, state, ["g"], 8)
-            states[label] = (
-                _state_schema(spark, state), _lens_rows(out)
-            )
-        assert states["dist"] == states["arrow"]
+        state = str(tmp_path / "boot")
+        before, after, union = _fold(
+            spark,
+            lambda df, i: merge_bootstrap_state(
+                spark, df, state, ["g"], "v", "rk", 8, batch_id=i
+            ),
+            batches,
+            "g string, rk long, v double",
+            state,
+        )
+        assert after == before
+        assert before[0] == [
+            "g:string", "__rep:int", "__ws:double", "__wn:double",
+            "__s:double", "__c:bigint",
+        ]
+        assert _lens_rows(read_bootstrap_matview(spark, state, ["g"], 8)) == (
+            _lens_rows(bootstrap_ci(union, ["g"], "v", "rk", n_replicates=8))
+        )
 
 
 def test_legacy_index_append_keeps_full_corpus_counts(spark, tmp_path):

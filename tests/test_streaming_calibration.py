@@ -5,6 +5,7 @@ two read lenses sharing one state.
 
 import uuid
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -149,11 +150,11 @@ class TestHeartbeatMatview:
         row = read_heartbeat_matview(spark, state, 1).collect()[0]
         assert row["n_rows"] == 1  # replay skipped, not double-counted
 
-    def test_bounded_fold_equals_distributed(self, spark, tmp_path):
-        """The driver-side Arrow fold (bounded_state=True, r14) must
-        produce a state Spark reads IDENTICALLY to the distributed
-        fold — same schema, same TIMESTAMP values, same counts —
-        across multi-batch merges and a replay."""
+    def test_fold_equals_batch_with_timestamp_key(self, spark, tmp_path):
+        """A multi-batch fold (one batch older than a key's current
+        max) reads back equal to one aggregate over the union, replay
+        of the last batch id is a no-op, and the state keeps Spark's
+        TIMESTAMP type for last_seen."""
         from recover_spark.streaming.matview import (
             merge_heartbeat_state,
             read_heartbeat_matview,
@@ -164,29 +165,43 @@ class TestHeartbeatMatview:
             [("b", 9_000_000), ("c", 4_000_000)],
             [("a", 2_000_000)],  # older than a's current max
         ]
-        states = {}
-        for label, bounded in (("dist", False), ("arrow", True)):
-            state = str(tmp_path / label)
-            for i, rows in enumerate(batches):
-                df = spark.createDataFrame(
-                    rows, "k string, us long"
-                ).selectExpr("k", "timestamp_micros(us) AS ts")
-                merge_heartbeat_state(
-                    spark, df, state, ["k"], "ts", batch_id=i,
-                    bounded_state=bounded,
-                )
-            # replay of the last batch must be a no-op in both modes
-            df = spark.createDataFrame(
-                batches[-1], "k string, us long"
-            ).selectExpr("k", "timestamp_micros(us) AS ts")
-            merge_heartbeat_state(
-                spark, df, state, ["k"], "ts", batch_id=len(batches) - 1,
-                bounded_state=bounded,
+        frames = [
+            spark.createDataFrame(rows, "k string, us long").selectExpr(
+                "k", "timestamp_micros(us) AS ts"
             )
-            out = read_heartbeat_matview(spark, state, 3600)
-            states[label] = (
-                [f.simpleString() for f in spark.read.parquet(state).schema],
-                sorted(tuple(r) for r in out.collect()),
-            )
-        assert states["dist"][0] == states["arrow"][0]
-        assert states["dist"][1] == states["arrow"][1]
+            for rows in batches
+        ]
+        state = str(tmp_path / "state")
+        for i, df in enumerate(frames):
+            merge_heartbeat_state(spark, df, state, ["k"], "ts", batch_id=i)
+        got = sorted(
+            tuple(r) for r in read_heartbeat_matview(spark, state, 3).collect()
+        )
+        merge_heartbeat_state(
+            spark, frames[-1], state, ["k"], "ts", batch_id=len(frames) - 1
+        )
+        assert sorted(
+            tuple(r) for r in read_heartbeat_matview(spark, state, 3).collect()
+        ) == got
+        assert [
+            f.simpleString() for f in spark.read.parquet(state).schema
+        ] == ["k:string", "last_seen:timestamp", "n_rows:bigint"]
+
+        union = frames[0].unionByName(frames[1]).unionByName(frames[2])
+        per_key = union.groupBy("k").agg(
+            F.max("ts").alias("last_seen"), F.count(F.lit(1)).alias("n_rows")
+        )
+        lag = (
+            F.unix_micros(F.max("last_seen").over(Window.partitionBy()))
+            - F.unix_micros("last_seen")
+        ) / F.lit(1_000_000.0)
+        want = per_key.select(
+            "k", "last_seen", "n_rows",
+            F.round(lag, 6).alias("lag_seconds"),
+            (lag > F.lit(3.0)).alias("is_stale"),
+        )
+        assert got == sorted(tuple(r) for r in want.collect())
+        # a's max stays 3 s (the older 2 s arrival loses); c lags 5 s
+        assert [(r[0], r[2], r[3]) for r in got] == [
+            ("a", 3, 6.0), ("b", 2, 0.0), ("c", 1, 5.0)
+        ]

@@ -493,7 +493,7 @@ def test_dedup_against_corpus_migrates_legacy_unpartitioned_state(
     assert got == {1, 10}
 
 
-def test_topk_matview_bounded_state_and_hot_keys_exact(spark, tmp_path):
+def test_topk_matview_capacity_bound_and_hot_keys_exact(spark, tmp_path):
     """Bounded frequent-items view: hot keys keep near-exact weights
     across increments while the state never exceeds the capacity, and
     a direct replay of an applied batch id is a no-op."""
