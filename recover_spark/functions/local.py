@@ -64,3 +64,15 @@ def write_local_parquet(rows, fields, out_dir: str, success: bool = True) -> Non
     pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
     if success:
         open(os.path.join(out_dir, "_SUCCESS"), "w").close()
+
+
+def write_arrow_table(table, out_dir: str) -> None:
+    """Write a driver-built pyarrow ``table`` as the one parquet file of
+    a new directory ``out_dir`` (the ``commit_dir`` writer for states
+    folded on the driver)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir)
+    pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))

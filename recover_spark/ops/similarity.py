@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from recover_spark.functions.local import tiny_df, write_local_parquet
+from recover_spark.sources.atomic import commit_dir, heal_swap
 from recover_spark.functions.vectors import cosine_from_norms, l2_norm
 
 # Driver-collected index GEOMETRY bounds (VERDICT r13 #4).  Probe
@@ -779,52 +780,36 @@ def build_ivf_index(
     Centroids are stored alongside (``_centroids`` subdir) so queries
     need no access to the original corpus.
 
-    The build is ATOMIC: everything is written under
-    ``<index_path>.build.tmp`` and promoted by the TWO-rename scheme
-    (live -> ``.old``, tmp -> live, delete ``.old`` — the matview
-    ``_swap_state`` convention): a crash mid-build leaves only a tmp
-    directory; a crash mid-promotion leaves either the previous live
-    generation or ``.old`` (healed by ``_heal_ivf_swap``) — at every
-    instant a COMPLETE index generation exists on disk, never a
-    half-written one that existence checks would mistake for whole.
+    The build is ATOMIC: it commits through ``commit_dir``
+    (sources/atomic.py), so a crash mid-build leaves only a tmp
+    directory and a crash mid-promotion leaves a healable ``.old`` —
+    at every instant a COMPLETE index generation exists on disk, never
+    a half-written one that existence checks would mistake for whole.
     """
-    import os as _os
-    import shutil as _shutil
-
-    seeds = _collect_seeds(corpus, n_centroids, id_col, vec_col)
-    tmp = index_path.rstrip("/") + ".build.tmp"
-    if _os.path.isdir(tmp):
-        _shutil.rmtree(tmp)
-    # Quantized columns are precomputed at BUILD time (the build-once
-    # half pays assignment + quantization; probes pay neither), so the
-    # quantized query path is a partition-pruned scan + integer dots.
-    assigned = corpus.withColumn(
-        "list", _nearest_lists(seeds, vec_col, 1)[0]
-    ).withColumn("q_embedding", _quantized_vec(F.col(vec_col)))
-    assigned.write.mode("overwrite").partitionBy("list").parquet(tmp)
-    cent_rows = [(cid, cvec) for cid, cvec in seeds]
-    # Driver-side pyarrow write (write_local_parquet docstring): the
-    # centroid rows already live on the driver — persisting them needs
-    # no Spark job at all, and readers see bit-identical doubles.
     import pyarrow as _pa
 
-    write_local_parquet(
-        cent_rows,
-        [(id_col, _pa.int64()), (vec_col, _pa.list_(_pa.float64()))],
-        f"{tmp}/_centroids",
-    )
-    # Two-rename promotion: never rmtree the live generation before
-    # the new one is in place (a crash between the two would leave NO
-    # index).  Ordering keeps a complete generation live or healable
-    # (.old) at every instant.
-    old = index_path.rstrip("/") + ".old"
-    if _os.path.isdir(index_path):
-        if _os.path.isdir(old):
-            _shutil.rmtree(old)  # stale; live exists, so inert
-        _os.rename(index_path, old)
-    _os.rename(tmp, index_path)
-    if _os.path.isdir(old):
-        _shutil.rmtree(old)
+    seeds = _collect_seeds(corpus, n_centroids, id_col, vec_col)
+
+    def write(tmp: str) -> None:
+        # Quantized columns are precomputed at BUILD time (the
+        # build-once half pays assignment + quantization; probes pay
+        # neither), so the quantized query path is a partition-pruned
+        # scan + integer dots.
+        assigned = corpus.withColumn(
+            "list", _nearest_lists(seeds, vec_col, 1)[0]
+        ).withColumn("q_embedding", _quantized_vec(F.col(vec_col)))
+        assigned.write.mode("overwrite").partitionBy("list").parquet(tmp)
+        # Driver-side pyarrow write (write_local_parquet docstring): the
+        # centroid rows already live on the driver — persisting them
+        # needs no Spark job at all, and readers see bit-identical
+        # doubles.
+        write_local_parquet(
+            seeds,
+            [(id_col, _pa.int64()), (vec_col, _pa.list_(_pa.float64()))],
+            f"{tmp}/_centroids",
+        )
+
+    commit_dir(index_path, write)
     # The builder's own seeds ARE what the first probe/append would
     # collect (sorted (cid, [float]) — _collect_seeds' format), so
     # seed the metadata cache and skip that job (guarded by the same
@@ -842,39 +827,13 @@ def ivf_index_complete(index_path: str) -> bool:
     rename guarantees this for new builds; the ``_SUCCESS`` probe
     additionally rejects indexes poisoned by pre-atomic crashes (an
     existing-but-empty ``_centroids`` is how a killed build used to
-    look).
-
-    Single-writer assumption (shared with ``_heal_ivf_swap`` /
-    ``_heal_pq_swap`` and the matview ``_swap_state`` convention):
-    the two-rename promotion is CRASH-safe, not CONCURRENCY-safe — a
-    reader healing between a live builder's two renames can rename
-    ``.old`` back over the live path and fail the builder's second
-    rename.  Maintenance verbs are offline jobs; run one at a time
-    per index directory."""
+    look)."""
     import os as _os
 
-    _heal_ivf_swap(index_path)
+    heal_swap(index_path)
     return _os.path.isfile(
         _os.path.join(index_path, "_centroids", "_SUCCESS")
     )
-
-
-def _heal_pq_swap(index_path: str) -> bool:
-    """Sidecar twin of ``_heal_ivf_swap``: a crash between the
-    build_pq_sidecar promotion renames leaves only ``_pq.old``;
-    restore it so the previous complete sidecar generation stays
-    readable.  Returns True when a restore happened.  Single-writer
-    assumption applies (see ``ivf_index_complete``): healing
-    concurrently with a live builder's swap window can race its
-    second rename — maintenance is one-at-a-time per index."""
-    import os as _os
-
-    live = f"{index_path}/_pq"
-    old = f"{index_path}/_pq.old"
-    if not _os.path.exists(live) and _os.path.exists(old):
-        _os.rename(old, live)
-        return True
-    return False
 
 
 def pq_sidecar_complete(index_path: str) -> bool:
@@ -882,7 +841,7 @@ def pq_sidecar_complete(index_path: str) -> bool:
     ``ivf_index_complete`` at the ``_pq`` grain)."""
     import os as _os
 
-    _heal_pq_swap(index_path)
+    heal_swap(f"{index_path}/_pq")
     return _os.path.isfile(
         _os.path.join(index_path, "_pq", "codebooks", "_SUCCESS")
     )
@@ -1292,27 +1251,10 @@ def compact_ivf_index(
     text sibling and the week-50 rationale."""
     from recover_spark.sources.compaction import compact_partitions
 
-    _heal_ivf_swap(index_path)
+    heal_swap(index_path)
     return compact_partitions(
         spark, index_path, "list", min_files_per_list
     )
-
-
-def _heal_ivf_swap(index_path: str) -> bool:
-    """Crash healer for the rebuild swap: the two-rename swap (live ->
-    .old, staging -> live) has a window where only ``.old`` exists.  On
-    entry to any maintenance verb, restore the retained copy so the
-    index is never lost to a crash between the renames — the same
-    contract as the streaming matview's ``_recover_state``
-    (streaming/matview.py).  Returns True when a restore happened.
-    Single-writer assumption applies (see ``ivf_index_complete``)."""
-    import os
-
-    old = index_path.rstrip("/") + ".old"
-    if not os.path.exists(index_path) and os.path.exists(old):
-        os.rename(old, index_path)
-        return True
-    return False
 
 
 def rebuild_ivf_index(
@@ -1330,22 +1272,18 @@ def rebuild_ivf_index(
     rebuild when ``imbalance_ratio`` exceeds ~2) and the nprobe/K cost
     model erodes because hot lists hold far more than corpus/K
     vectors.  Rebuild = extract every stored (id, vector) from the
-    index, re-run the deterministic build (fresh seeds, fresh
-    assignment, fresh quantized columns) into a staging directory, and
-    swap it in — so by construction
+    index and re-run the deterministic build (fresh seeds, fresh
+    assignment, fresh quantized columns) over it — so by construction
 
         rebuild(index)  ==  build_ivf_index(all vectors ever added)
 
     which is the test/correctness oracle: a probe over the rebuilt
     index equals the same probe over a fresh index of the combined
-    corpus.  The swap is two directory renames (old out, staging in);
-    run it as the offline maintenance job it is — the classic IVF
-    pattern (probe with frozen quantizer, retrain out of band).
+    corpus.  The build's own atomic commit is the one swap; run it as
+    the offline maintenance job it is — the classic IVF pattern (probe
+    with frozen quantizer, retrain out of band).
     """
-    import os
-    import shutil
-
-    _heal_ivf_swap(index_path)
+    heal_swap(index_path)
     if n_centroids is None:
         # _centroids is the driver-written local parquet sidecar (see
         # write_local_parquet) — its row count is parquet FILE METADATA,
@@ -1358,24 +1296,15 @@ def rebuild_ivf_index(
         ).num_rows
     corpus = spark.read.parquet(index_path).select(id_col, vec_col)
     # No materialization needed (r15): every read of the live
-    # directory — the seeds collect and the staging write inside
-    # build_ivf_index — completes BEFORE the swap renames below run,
-    # so the lazy frame can never observe a mid-swap directory.  The
-    # eager localCheckpoint this replaces was a whole extra
-    # materialization job per rebuild.
-    staging = index_path.rstrip("/") + ".rebuild"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
+    # directory — the seeds collect and the tmp write inside
+    # build_ivf_index — completes BEFORE its swap renames run, so the
+    # lazy frame can never observe a mid-swap directory.  The eager
+    # localCheckpoint this replaces was a whole extra materialization
+    # job per rebuild.
     build_ivf_index(
-        corpus, staging, n_centroids=n_centroids,
+        corpus, index_path, n_centroids=n_centroids,
         id_col=id_col, vec_col=vec_col,
     )
-    old = index_path.rstrip("/") + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(index_path, old)
-    os.rename(staging, index_path)
-    shutil.rmtree(old)
 
 
 def delete_from_ivf_index(
@@ -1406,7 +1335,7 @@ def delete_from_ivf_index(
     import os
     import shutil
 
-    _heal_ivf_swap(index_path)
+    heal_swap(index_path)
     if isinstance(vec_ids, DataFrame):
         ids_df = vec_ids.select(
             F.col(vec_ids.columns[0]).cast("long").alias(id_col)
@@ -1765,48 +1694,34 @@ def build_pq_sidecar(
         vec_col,
         subdim,
     ).select(id_col, "list", F.col("__codes").alias("pq_codes"))
-    # atomic at the sidecar grain: codes + codebooks land under
-    # _pq.build.tmp and promote via the two-rename scheme (live _pq
-    # -> _pq.old, tmp -> _pq, delete .old — the build_ivf_index
-    # convention) — a crash can neither leave a sidecar whose codes
-    # exist but codebooks don't, nor a window with NO sidecar after
-    # one previously existed
-    import os as _os
-    import shutil as _shutil
-
-    tmp = f"{index_path}/_pq.build.tmp"
-    if _os.path.isdir(tmp):
-        _shutil.rmtree(tmp)
-    encoded.write.mode("overwrite").partitionBy("list").parquet(
-        f"{tmp}/codes"
-    )
     cb_rows = [
         (s, j, center)
         for s, book in enumerate(books)
         for j, center in book
     ]
-    # Driver-side pyarrow write (write_local_parquet docstring): the
-    # codebook rows already live on the driver — zero Spark jobs.
     import pyarrow as _pa
 
-    write_local_parquet(
-        cb_rows,
-        [
-            ("s", _pa.int32()),
-            ("j", _pa.int64()),
-            ("center", _pa.list_(_pa.float64())),
-        ],
-        f"{tmp}/codebooks",
-    )
-    final = f"{index_path}/_pq"
-    old = f"{index_path}/_pq.old"
-    if _os.path.isdir(final):
-        if _os.path.isdir(old):
-            _shutil.rmtree(old)  # stale; live exists, so inert
-        _os.rename(final, old)
-    _os.rename(tmp, final)
-    if _os.path.isdir(old):
-        _shutil.rmtree(old)
+    def write(tmp: str) -> None:
+        encoded.write.mode("overwrite").partitionBy("list").parquet(
+            f"{tmp}/codes"
+        )
+        # Driver-side pyarrow write (write_local_parquet docstring): the
+        # codebook rows already live on the driver — zero Spark jobs.
+        write_local_parquet(
+            cb_rows,
+            [
+                ("s", _pa.int32()),
+                ("j", _pa.int64()),
+                ("center", _pa.list_(_pa.float64())),
+            ],
+            f"{tmp}/codebooks",
+        )
+
+    # atomic at the sidecar grain: codes + codebooks commit together
+    # through ``commit_dir`` — a crash can neither leave a sidecar whose
+    # codes exist but codebooks don't, nor a window with NO sidecar
+    # after one previously existed
+    commit_dir(f"{index_path}/_pq", write)
     # The builder's cb_rows ARE what the first probe/append would
     # collect; consumers re-sort by (j, center) per subspace, so Row
     # objects in write order are equivalent to the collect's rows.
@@ -1839,7 +1754,7 @@ def ivf_pq_topk_indexed(
     Output matches ``ivf_pq_topk`` on the same corpus/params."""
     qid = f"query_{id_col}"
     seeds = _collect_centroids(spark, index_path)
-    _heal_pq_swap(index_path)
+    heal_swap(f"{index_path}/_pq")
     cb_rows = _collect_codebooks(spark, index_path)
     m = 1 + max(int(r["s"]) for r in cb_rows)
     books = [
@@ -1918,7 +1833,7 @@ def ivf_pq_topk_refined(
     """
     qid = f"query_{id_col}"
     seeds = _collect_centroids(spark, index_path)
-    _heal_pq_swap(index_path)
+    heal_swap(f"{index_path}/_pq")
     cb_rows = _collect_codebooks(spark, index_path)
     m = 1 + max(int(r["s"]) for r in cb_rows)
     books = [
@@ -2019,7 +1934,7 @@ def append_pq_sidecar(
     retrain-offline pattern as the coarse quantizer.
     """
     seeds = _collect_centroids(spark, index_path)
-    _heal_pq_swap(index_path)
+    heal_swap(f"{index_path}/_pq")
     cb_rows = _collect_codebooks(spark, index_path)
     m = 1 + max(int(r["s"]) for r in cb_rows)
     books = [

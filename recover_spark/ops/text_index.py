@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recover_spark.functions.text import tokens
+from recover_spark.sources.atomic import write_text_atomic
 
 META_NAME = "_text_index.json"
 
@@ -145,10 +146,9 @@ def build_text_index(
         "n_docs": n_docs,
         "vectors_cover_corpus": True,
     }
-    tmp = os.path.join(path, META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(path, META_NAME))
+    write_text_atomic(
+        os.path.join(path, META_NAME), json.dumps(meta, sort_keys=True)
+    )
     return meta
 
 
@@ -218,10 +218,9 @@ def append_text_index(
             spark, os.path.join(path, "postings"), _POSTINGS_SCHEMA
         )
         meta["n_docs"] = stored.select("doc_id").distinct().count()
-    tmp = os.path.join(path, META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(path, META_NAME))
+    write_text_atomic(
+        os.path.join(path, META_NAME), json.dumps(meta, sort_keys=True)
+    )
     return meta
 
 
@@ -427,11 +426,13 @@ def delete_from_text_index(
     new_df.write.mode("overwrite").parquet(df_path)
     meta["n_docs"] = int(meta["n_docs"]) - int(n_present)
     meta["n_deleted"] = n_ids
-    tmp = os.path.join(path, META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({k: v for k, v in meta.items() if k != "n_deleted"}, fh,
-                  sort_keys=True)
-    os.replace(tmp, os.path.join(path, META_NAME))
+    write_text_atomic(
+        os.path.join(path, META_NAME),
+        json.dumps(
+            {k: v for k, v in meta.items() if k != "n_deleted"},
+            sort_keys=True,
+        ),
+    )
     return meta
 
 
@@ -502,7 +503,9 @@ def probe_text_index(
       tile, and the corpus is never shuffled, joined, collected, or
       broadcast.  Cost one corpus vector scan per probe — on a corpus
       this dense that IS the candidate set, and the tile runs it at
-      matrix-multiply rate instead of a row-explosion join.
+      matrix-multiply rate instead of a row-explosion join.  Needs the
+      ``vectors_cover_corpus`` meta flag: on an index built before it,
+      ``"auto"`` picks ``"prefix"`` and ``"dense"`` raises.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
@@ -516,12 +519,22 @@ def probe_text_index(
     batch = _batch_postings(new_docs, id_col, text_col).localCheckpoint(
         eager=False
     )
+    # dense scans vectors/, which only an index carrying the coverage
+    # flag keeps whole: appends to an older index skip vectors/
+    covered = bool(meta.get("vectors_cover_corpus"))
     if strategy == "auto":
-        vocab_n = _read_or_empty(
+        strategy = "prefix"
+        if covered and _read_or_empty(
             spark, os.path.join(path, "df"), _DF_SCHEMA
-        ).count()
-        strategy = "dense" if vocab_n <= max_dense_vocab else "prefix"
+        ).count() <= max_dense_vocab:
+            strategy = "dense"
     if strategy == "dense":
+        if not covered:
+            raise ValueError(
+                f"dense probe needs vectors_cover_corpus in {META_NAME}; "
+                "this index predates it, so vectors/ may miss appended "
+                "documents — use strategy='prefix'"
+            )
         return _probe_dense(
             spark, batch, path, nb, threshold, round_digits
         )

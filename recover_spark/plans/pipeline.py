@@ -20,6 +20,7 @@ scans, and the A2 empty-input gate reads the observed READ count.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -31,6 +32,23 @@ from recover_spark.operators.deletes import drop_deleted
 from recover_spark.operators.relationalize import has_nested_fields, relationalize
 from recover_spark.schemas.registry import TableSpec
 from recover_spark.sources.writers import write_partitioned_parquet
+
+
+def route_tables(
+    df: DataFrame, name: str, index_fields: Sequence[str]
+) -> dict[str, DataFrame]:
+    """The output tables of one data type: relationalized when the
+    frame is nested, ``{name: df}`` otherwise.  Shared by the batch
+    pipeline and the incremental state reader
+    (``streaming/incremental.pipeline_tables_from_state``)."""
+    # ``relationalize`` resolves through this module's globals on every
+    # call, so a tracer that wraps the name sees both callers.
+    if has_nested_fields(df.schema):
+        carry = list(index_fields) + [
+            c for c in ("cohort", "ParticipantID") if c in df.columns
+        ]
+        return relationalize(df, name, carry_cols=carry)
+    return {name: df}
 
 
 @dataclass
@@ -69,22 +87,14 @@ class DatasetPipeline:
             )
         return df
 
-    def _tables(self, df: DataFrame) -> dict[str, DataFrame]:
-        spec = self.spec
-        if has_nested_fields(df.schema):
-            carry = list(spec.index_fields) + [
-                c for c in ("cohort", "ParticipantID") if c in df.columns
-            ]
-            return relationalize(df, spec.name, carry_cols=carry)
-        return {spec.name: df}
-
     def build(
         self,
         df: DataFrame,
         deleted: DataFrame | None = None,
     ) -> dict[str, DataFrame]:
         """Build the lazy plan; returns {table_name: DataFrame}."""
-        return self._tables(self._post_delete(df, deleted, self.observe_counts))
+        frame = self._post_delete(df, deleted, self.observe_counts)
+        return route_tables(frame, self.spec.name, self.spec.index_fields)
 
     def run(
         self,
@@ -103,7 +113,7 @@ class DatasetPipeline:
         # A2 — empty-input short-circuit (json_to_parquet.py:658-659).
         if counts["READ"] == 0:
             return PipelineResult(tables={}, counts={})
-        tables = self._tables(frame)
+        tables = route_tables(frame, self.spec.name, self.spec.index_fields)
         for name, table in tables.items():
             write_partitioned_parquet(
                 table, f"{output_root}/dataset={name}", partition_by=("cohort",)

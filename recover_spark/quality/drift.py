@@ -84,15 +84,22 @@ def quantile_edge_row(
 
 
 def binned_counts_against_edges(
-    df: DataFrame, edges_row: DataFrame, cols: Sequence[str], tag: str
+    df: DataFrame,
+    edges_row: DataFrame,
+    cols: Sequence[str],
+    tag: str,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-(column, bin) counts of ``df`` against a one-row edge frame.
+    """Per-(``group_cols``..., column, bin) counts of ``df`` against a
+    one-row edge frame.
 
     Bucket index = number of edges <= value; the edge frame broadcasts
     so binning is map-side, and all columns ride one aggregate.
     Reused by the streaming drift monitor, where ``edges_row`` is the
-    frozen baseline metadata and ``df`` is an arriving micro-batch.
+    frozen baseline metadata and ``df`` is an arriving micro-batch, and
+    by ``ks_drift_by_period`` with the period as the group column.
     """
+    group_cols = list(group_cols)
     j = df.crossJoin(F.broadcast(edges_row))
     per_col = []
     for c in cols:
@@ -102,9 +109,12 @@ def binned_counts_against_edges(
             F.when(v.isNotNull(), F.struct(F.lit(c).alias("column"), idx.alias("bin")))
         )
     exploded = j.select(
-        F.explode(F.filter(F.array(*per_col), lambda s: s.isNotNull())).alias("cb")
-    ).select("cb.column", "cb.bin")
-    return exploded.groupBy("column", "bin").agg(F.count(F.lit(1)).alias(f"n_{tag}"))
+        *group_cols,
+        F.explode(F.filter(F.array(*per_col), lambda s: s.isNotNull())).alias("cb"),
+    ).select(*group_cols, "cb.column", "cb.bin")
+    return exploded.groupBy(*group_cols, "column", "bin").agg(
+        F.count(F.lit(1)).alias(f"n_{tag}")
+    )
 
 
 # ks_drift_by_period keeps the edge grid and the period domain as lazy
@@ -661,31 +671,12 @@ def ks_drift_by_period(
     # inlining measurement above _edges_literal_map.
     edges_row = quantile_edge_row(baseline, cols, n_grid, edge_accuracy)
 
-    def binned(df: DataFrame, with_period: bool) -> DataFrame:
-        per_col = []
-        j = df.crossJoin(F.broadcast(edges_row))
-        for c in cols:
-            v = F.col(c).cast("double")
-            idx = F.size(F.filter(F.col(f"__e_{c}"), lambda e: e <= v))
-            per_col.append(
-                F.when(
-                    v.isNotNull(),
-                    F.struct(F.lit(c).alias("column"), idx.alias("bin")),
-                )
-            )
-        lead = [F.col(period_col).alias("period")] if with_period else []
-        ex = j.select(
-            *lead,
-            F.explode(
-                F.filter(F.array(*per_col), lambda s: s.isNotNull())
-            ).alias("cb"),
-        ).select(*(["period"] if with_period else []), "cb.column", "cb.bin")
-        return ex.groupBy(
-            *(["period"] if with_period else []), "column", "bin"
-        ).agg(F.count(F.lit(1)).alias("n"))
-
-    base_counts = binned(baseline, with_period=False)
-    cur_counts = binned(current, with_period=True)
+    base_counts = binned_counts_against_edges(
+        baseline, edges_row, cols, "base"
+    )
+    cur_counts = binned_counts_against_edges(
+        current, edges_row, cols, "cur", group_cols=[period_col]
+    ).withColumnRenamed(period_col, "period")
 
     # dense (period x column x bin) frame so cumsums align over gaps
     bins = F.explode(
@@ -722,7 +713,7 @@ def ks_drift_by_period(
     base_dense = (
         base_slots
         .join(F.broadcast(base_counts), ["column", "bin"], "left")
-        .withColumn("__nb", F.coalesce("n", F.lit(0)))
+        .withColumn("__nb", F.coalesce("n_base", F.lit(0)))
         .withColumn("__cb", F.sum("__nb").over(w_base))
     )
     w_cur = Window.partitionBy("period", "column").orderBy(
@@ -732,7 +723,7 @@ def ks_drift_by_period(
         frame.join(
             F.broadcast(cur_counts), ["period", "column", "bin"], "left"
         )
-        .withColumn("__np", F.coalesce("n", F.lit(0)))
+        .withColumn("__np", F.coalesce("n_cur", F.lit(0)))
         .withColumn("__cp", F.sum("__np").over(w_cur))
     )
     b_tot = base_dense.groupBy("column").agg(

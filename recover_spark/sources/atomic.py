@@ -1,14 +1,46 @@
-"""Atomic dataset replace — generation directories + pointer swap.
+"""Crash-safe commits — the one protocol every persisted state uses.
 
 The reference replaces a dataset by copying the old output to an
 archive prefix and then deleting/rewriting in place
 (json_to_parquet.py:348-366): a reader concurrent with the weekly rerun
 can observe a half-deleted or half-written dataset.  SURVEY.md §7's
-watch-list calls for write-to-temp-then-swap; this module goes one step
-stronger, because even a rename pair (dataset -> archive, staging ->
-dataset) has a window with NO live dataset.
+watch-list calls for write-to-temp-then-swap; every writer in this
+package that replaces a directory or a sidecar file goes through the
+helpers below, so there is one protocol to test.
 
-Layout under the dataset root::
+Directory state (streaming matviews, drift and suite counters, corpus
+dedup state, IVF index, PQ sidecar) commits in five steps:
+
+1. **heal** (``heal_swap``) — a crash between the two renames of step
+   5 leaves only ``<path>.old``; rename it back so every previously
+   committed batch survives (restarting from an empty state would
+   undercount for good: the checkpoint already consumed that input);
+2. **replay guard** (``replayed``) — a batch whose id is <= the
+   ``_applied_batch_id`` marker is a foreachBatch replay and is
+   skipped, which upgrades at-least-once to effectively-once;
+3. **write tmp** (``commit_dir``) — ``write(<path>.tmp)`` produces the
+   next generation beside the live one;
+4. **marker** — the batch id lands inside the tmp dir, so it swaps in
+   atomically with the state it describes;
+5. **two renames** — live -> ``<path>.old``, tmp -> live, then delete
+   ``.old``: a complete generation exists on disk at every instant.
+
+Sidecar files (index metas, frozen bins, suites, zone/Bloom manifests,
+the ``_CURRENT`` pointer) are replaced by ``write_text_atomic``: write
+``<path>.tmp``, then one ``os.replace`` — readers see the old or the
+new bytes, never half.  Appends that are not atomic (the text and IVF
+index ingest) keep their marker in a separate ``_applied_batch`` file,
+written this way LAST, after the append, and read by ``replayed``.
+
+Single-writer assumption: the two-rename swap is crash-safe, not
+concurrency-safe.  A reader that heals between a live writer's two
+renames can rename ``.old`` back over the live path and fail the
+writer's second rename.  Maintenance verbs and merges are offline
+jobs; run one at a time per state directory.
+
+Whole datasets get a stronger layout, because even a rename pair
+(dataset -> archive, staging -> dataset) has a window with NO live
+dataset — ``write_dataset_atomic``::
 
     root/
       _CURRENT            <- one line: name of the live generation dir
@@ -16,15 +48,11 @@ Layout under the dataset root::
       gen-00000002/
       .staging-<run_id>/  <- in-flight write, invisible to readers
 
-Protocol (every step crash-safe):
-
 1. write the new generation into ``.staging-<run_id>`` — readers never
    resolve staging dirs, so a torn write is invisible;
 2. rename staging -> ``gen-<seq>`` — a complete but not-yet-live
    generation; a crash here leaves it unreferenced (pruned later);
-3. promote by writing ``_CURRENT`` via write-temp + ``os.rename`` —
-   the POSIX atomic-rename guarantee means every reader sees either
-   the old pointer or the new pointer, never a partial dataset;
+3. promote by writing ``_CURRENT`` with ``write_text_atomic``;
 4. prune generations beyond ``keep_generations`` (never the live one)
    — the kept tail IS the archive (K5 parity: the previous generation
    remains readable after a replace, addressable by name).
@@ -42,7 +70,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +81,69 @@ _POINTER = "_CURRENT"
 _GEN_PREFIX = "gen-"
 _STAGING_PREFIX = ".staging-"
 _COMMIT_META = "_commit.json"
+BATCH_MARKER = "_applied_batch_id"
+APPEND_MARKER = "_applied_batch"
+
+
+def write_text_atomic(path: str, text: str) -> None:
+    """Replace the file at ``path`` with ``text`` (tmp + ``os.replace``)."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def heal_swap(path: str) -> bool:
+    """Restore ``<path>.old`` when a crash between the two renames left
+    no live ``path``.  Returns True when a restore happened."""
+    path = path.rstrip("/")
+    old = path + ".old"
+    if os.path.exists(old) and not os.path.exists(path):
+        os.rename(old, path)
+        return True
+    return False
+
+
+def replayed(
+    path: str, batch_id: int | None, marker: str = BATCH_MARKER
+) -> bool:
+    """Heal a mid-swap crash, then tell whether ``batch_id`` is a replay
+    of an already-applied batch (the caller must skip it): its id is <=
+    the one recorded in ``path``/``marker``."""
+    heal_swap(path)
+    if batch_id is None:
+        return False
+    try:
+        applied = int((Path(path) / marker).read_text().strip())
+    except (FileNotFoundError, NotADirectoryError, ValueError):
+        return False
+    return batch_id <= applied
+
+
+def commit_dir(
+    path: str,
+    write: Callable[[str], object],
+    batch_id: int | None = None,
+) -> None:
+    """Commit the next generation of the directory ``path``:
+    ``write(tmp)`` fills a fresh ``<path>.tmp``, the batch-id marker
+    lands inside it, then two renames swap it in (live -> ``.old``,
+    tmp -> live) and ``.old`` is deleted.  One writer per ``path`` at a
+    time (the single-writer assumption in the module docstring)."""
+    path = path.rstrip("/")
+    heal_swap(path)
+    tmp, old = path + ".tmp", path + ".old"
+    for stale in (tmp, old):
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+    write(tmp)
+    if batch_id is not None:
+        (Path(tmp) / BATCH_MARKER).write_text(str(batch_id))
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 class CrashInjected(RuntimeError):
@@ -214,9 +305,7 @@ def write_dataset_atomic(
     _check_fail(_fail_point, "after-rename")
 
     # atomic promote: readers see the old pointer or the new pointer
-    tmp = root / (_POINTER + ".tmp")
-    tmp.write_text(gen_name + "\n")
-    os.rename(tmp, root / _POINTER)
+    write_text_atomic(str(root / _POINTER), gen_name + "\n")
     _check_fail(_fail_point, "after-promote")
 
     _prune_generations(path, keep_generations)

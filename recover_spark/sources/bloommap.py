@@ -56,6 +56,8 @@ from collections.abc import Iterator, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recover_spark.sources.atomic import write_text_atomic
+
 MANIFEST_NAME = "_bloommap.json"
 
 
@@ -191,13 +193,6 @@ def _list_files(path: str) -> list[str]:
     )
 
 
-def _write_manifest(manifest: dict, target: str) -> None:
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, sort_keys=True)
-    os.replace(tmp, target)  # atomic promote
-
-
 def build_bloommap(
     spark: SparkSession,
     path: str,
@@ -232,7 +227,10 @@ def build_bloommap(
             key=lambda e: e["file"],
         ),
     }
-    _write_manifest(manifest, manifest_path or os.path.join(path, MANIFEST_NAME))
+    write_text_atomic(
+        manifest_path or os.path.join(path, MANIFEST_NAME),
+        json.dumps(manifest, sort_keys=True),
+    )
     return manifest
 
 
@@ -267,7 +265,7 @@ def refresh_bloommap(
             )
         )
     manifest["files"] = sorted(kept, key=lambda e: e["file"])
-    _write_manifest(manifest, target)
+    write_text_atomic(target, json.dumps(manifest, sort_keys=True))
     return manifest
 
 

@@ -19,7 +19,7 @@ import time
 from pathlib import Path
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_RECORDS_PER_FILE = 1_000_000  # json_to_parquet.py:377
@@ -172,62 +172,3 @@ def overwrite_partitions_dynamic(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_by: Sequence[str],
-    target_records_per_file: int = DEFAULT_RECORDS_PER_FILE,
-    predicate: str | None = None,
-) -> None:
-    """Small-file compaction: rewrite (a subset of) a hive-partitioned
-    dataset into ~target-sized files, partition layout preserved.
-
-    Streaming/incremental sinks accrete many small files per partition;
-    at scale the scan cost becomes file-open-bound (the reference
-    groups small files at read time — SURVEY.md §2.1 groupFiles; this
-    is the write-side fix).  ``predicate`` (e.g. "week = '2024-01'")
-    limits the rewrite to hot partitions: partition pruning makes the
-    read touch only those, and dynamic overwrite replaces only them.
-    One range-free shuffle: ``repartition`` on the partition columns
-    co-locates each partition's rows so every output partition is
-    written by as few tasks as its size needs.
-    """
-    df = spark.read.parquet(path)
-    if predicate:
-        # the predicate must prune PARTITIONS, not rows: a row-level
-        # predicate (e.g. "v > 5") would overwrite each touched
-        # partition with only its matching rows — silent data loss.
-        # Resolving the predicate against a DETACHED frame holding only
-        # the partition columns rejects any data-column reference (a
-        # plain .select().filter() probe would not: the analyzer
-        # re-adds missing attributes from the projection's child).
-        probe = spark.createDataFrame([], df.select(*partition_by).schema)
-        try:
-            filtered_probe = probe.filter(predicate)
-            filtered_probe.schema
-        except Exception as ex:
-            raise ValueError(
-                "compaction predicate may reference only partition "
-                f"columns {list(partition_by)}: {predicate!r}"
-            ) from ex
-        # a non-deterministic predicate ("rand() < 0.5") references no
-        # data column yet still filters rows WITHIN touched partitions —
-        # the same silent data loss the column check exists to prevent.
-        # The analyzed Filter's condition is its only expression; ask
-        # Catalyst whether it is deterministic.
-        exprs = filtered_probe._jdf.queryExecution().analyzed().expressions()
-        for i in range(exprs.size()):
-            if not exprs.apply(i).deterministic():
-                raise ValueError(
-                    "compaction predicate must be deterministic (it "
-                    "selects whole partitions to rewrite, and a "
-                    "non-deterministic filter would drop rows inside "
-                    f"them): {predicate!r}"
-                )
-        df = df.filter(predicate)
-    compacted = df.repartition(*[F.col(c) for c in partition_by])
-    overwrite_partitions_dynamic(
-        compacted, path, partition_by, records_per_file=target_records_per_file
-    )

@@ -42,6 +42,8 @@ from collections.abc import Iterator, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recover_spark.sources.atomic import write_text_atomic
+
 MANIFEST_NAME = "_zonemap.json"
 
 # Bound value encoded for JSON: numbers / strings pass through;
@@ -162,10 +164,7 @@ def build_zonemap(
         ),
     }
     target = manifest_path or os.path.join(path, MANIFEST_NAME)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, target)  # atomic promote: readers see old or new, never half
+    write_text_atomic(target, json.dumps(manifest, indent=1, sort_keys=True))
     return manifest
 
 
@@ -234,10 +233,7 @@ def refresh_zonemap(
         "tracked_columns": cols,
         "files": sorted(kept, key=lambda e: e["file"]),
     }
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(merged, fh, indent=1, sort_keys=True)
-    os.replace(tmp, target)
+    write_text_atomic(target, json.dumps(merged, indent=1, sort_keys=True))
     return merged
 
 

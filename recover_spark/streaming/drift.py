@@ -18,10 +18,10 @@ and binned counts are ADDITIVE, so after any number of batches
     read_drift_psi(state)  ==  psi_drift(baseline, union of batches)
 
 bit-for-bit (integer counts, same shares, same clamp) — the test
-oracle.  Crash safety is the matview sidecar contract verbatim: the
-``_applied_batch_id`` marker swaps in atomically with the counts it
-describes, so foreachBatch replays are no-ops and a mid-swap crash
-heals on the next run.
+oracle.  Crash safety is the commit protocol of
+``recover_spark/sources/atomic.py``: the ``_applied_batch_id`` marker
+swaps in atomically with the counts it describes, so foreachBatch
+replays are no-ops and a mid-swap crash heals on the next run.
 
 Scale shape: per batch, one map-side bin pass + one (column, bin)
 aggregate (bins x columns rows — metadata-sized state), one state
@@ -38,6 +38,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recover_spark.functions.local import write_arrow_table
 from recover_spark.quality.drift import (
     binned_counts_against_edges,
     category_counts,
@@ -47,11 +48,11 @@ from recover_spark.quality.drift import (
     quantile_edge_row,
     top_category_bins,
 )
-from recover_spark.streaming.matview import (
-    _commit_state,
-    _recover_state,
-    _replayed,
-    _write_arrow,
+from recover_spark.sources.atomic import (
+    commit_dir,
+    heal_swap,
+    replayed,
+    write_text_atomic,
 )
 
 _META_NAME = "_drift_meta.json"
@@ -85,10 +86,10 @@ def freeze_drift_baseline(
         os.path.join(state_path, "baseline_counts")
     )
     meta = {"cols": cols, "n_bins": int(n_bins)}
-    tmp = os.path.join(state_path, _META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(state_path, _META_NAME))
+    write_text_atomic(
+        os.path.join(state_path, _META_NAME),
+        json.dumps(meta, sort_keys=True),
+    )
     return meta
 
 
@@ -125,11 +126,11 @@ def merge_drift_counts(
 ) -> None:
     """Fold one batch's binned counts into the accumulating current-era
     state (``counts/`` under ``state_path``), idempotent per batch id
-    via the matview sidecar."""
+    via the batch-id marker."""
     meta = _read_meta(state_path)
     cols, n_bins = meta["cols"], meta["n_bins"]
     counts_path = os.path.join(state_path, "counts")
-    if _replayed(counts_path, batch_id):
+    if replayed(counts_path, batch_id):
         return
     edges_row = spark.read.parquet(os.path.join(state_path, "edges"))
     # The batch pass (data-sized) stays one Spark aggregate; its RESULT
@@ -164,7 +165,9 @@ def merge_drift_counts(
             "n_cur": pa.array([n for _, n in rows], type=pa.int64()),
         }
     )
-    _commit_state(counts_path, batch_id, lambda tmp: _write_arrow(table, tmp))
+    commit_dir(
+        counts_path, lambda tmp: write_arrow_table(table, tmp), batch_id
+    )
 
 
 def maintain_drift_matview(
@@ -208,7 +211,7 @@ def read_drift_psi(
     cols, n_bins = _resolve_cols(meta, cols), meta["n_bins"]
     base = spark.read.parquet(os.path.join(state_path, "baseline_counts"))
     counts_path = os.path.join(state_path, "counts")
-    _recover_state(counts_path)
+    heal_swap(counts_path)
     if Path(counts_path).exists():
         cur = spark.read.parquet(counts_path)
     else:
@@ -250,10 +253,10 @@ def freeze_categorical_baseline(
         "overwrite"
     ).parquet(os.path.join(state_path, "cat_baseline_counts"))
     meta = {"cols": cols, "top_k": int(top_k)}
-    tmp = os.path.join(state_path, _CAT_META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(state_path, _CAT_META_NAME))
+    write_text_atomic(
+        os.path.join(state_path, _CAT_META_NAME),
+        json.dumps(meta, sort_keys=True),
+    )
     return meta
 
 
@@ -269,13 +272,13 @@ def merge_categorical_drift_counts(
     batch_id: int | None = None,
 ) -> None:
     """Fold one batch's pooled category counts into the accumulating
-    state (``cat_counts/``), idempotent per batch id via the matview
-    sidecar.  Pooled counts are additive, so the accumulated table
+    state (``cat_counts/``), idempotent per batch id via the batch-id
+    marker.  Pooled counts are additive, so the accumulated table
     equals the batch pooling of the union exactly."""
     meta = _read_cat_meta(state_path)
     cols = meta["cols"]
     counts_path = os.path.join(state_path, "cat_counts")
-    if _replayed(counts_path, batch_id):
+    if replayed(counts_path, batch_id):
         return
     top = spark.read.parquet(os.path.join(state_path, "cat_bins"))
     partial = pooled_category_counts(
@@ -290,7 +293,7 @@ def merge_categorical_drift_counts(
         )
     else:
         merged = partial
-    _commit_state(counts_path, batch_id, merged.coalesce(1).write.parquet)
+    commit_dir(counts_path, merged.coalesce(1).write.parquet, batch_id)
 
 
 def maintain_categorical_drift_matview(
@@ -329,7 +332,7 @@ def read_categorical_drift_psi(
         os.path.join(state_path, "cat_baseline_counts")
     )
     counts_path = os.path.join(state_path, "cat_counts")
-    _recover_state(counts_path)
+    heal_swap(counts_path)
     if Path(counts_path).exists():
         cur = spark.read.parquet(counts_path)
     else:
@@ -343,7 +346,7 @@ def _current_counts(spark: SparkSession, state_path: str) -> DataFrame:
     """Accumulated current-era binned counts (empty frame before any
     batch arrives) — shared by every numeric read-side."""
     counts_path = os.path.join(state_path, "counts")
-    _recover_state(counts_path)
+    heal_swap(counts_path)
     if Path(counts_path).exists():
         return spark.read.parquet(counts_path)
     return spark.createDataFrame([], "column string, bin int, n_cur long")

@@ -25,7 +25,7 @@ type (count-distinct needs key-sized state, not counter-sized):
 or track approximate distinctness with the KMV sketch family —
 rather than silently keeping per-batch-only uniqueness.
 
-Crash safety is the matview sidecar contract verbatim
+Crash safety is the commit protocol of ``sources/atomic.py``
 (``_applied_batch_id`` swaps in atomically with the counters it
 describes; replays are no-ops).  Scale shape: per batch ONE aggregate
 pass (the run_suite compilation), suite-sized state (a few rows), one
@@ -40,14 +40,13 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from recover_spark.functions.local import tiny_df
-
+from recover_spark.functions.local import tiny_df, write_arrow_table
 from recover_spark.quality.expectations import parse_suite, run_suite
-from recover_spark.streaming.matview import (
-    _commit_state,
-    _recover_state,
-    _replayed,
-    _write_arrow,
+from recover_spark.sources.atomic import (
+    commit_dir,
+    heal_swap,
+    replayed,
+    write_text_atomic,
 )
 
 _SUITE_NAME = "_suite.json"
@@ -89,10 +88,10 @@ def freeze_expectation_suite(state_path: str, suite) -> list:
             for e in parsed
         ]
     }
-    tmp = os.path.join(state_path, _SUITE_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(spec, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(state_path, _SUITE_NAME))
+    write_text_atomic(
+        os.path.join(state_path, _SUITE_NAME),
+        json.dumps(spec, sort_keys=True),
+    )
     return parsed
 
 
@@ -108,12 +107,12 @@ def merge_expectation_counts(
     batch_id: int | None = None,
 ) -> None:
     """Fold one batch's per-expectation counters into the accumulating
-    state (``counts/``), idempotent per batch id via the matview
-    sidecar.  The batch pass IS run_suite (one aggregate job); only
+    state (``counts/``), idempotent per batch id via the batch-id
+    marker.  The batch pass IS run_suite (one aggregate job); only
     its integer counters persist."""
     suite = _read_suite(state_path)
     counts_path = os.path.join(state_path, "counts")
-    if _replayed(counts_path, batch_id):
+    if replayed(counts_path, batch_id):
         return
     results = run_suite(batch, suite)
     # exists-type: n=0 and bad = 0/1 so the AND folds as sum(bad)==0
@@ -150,7 +149,9 @@ def merge_expectation_counts(
             "bad": pa.array([v[1] for _, v in rows], type=pa.int64()),
         }
     )
-    _commit_state(counts_path, batch_id, lambda tmp: _write_arrow(table, tmp))
+    commit_dir(
+        counts_path, lambda tmp: write_arrow_table(table, tmp), batch_id
+    )
 
 
 def maintain_expectations_matview(
@@ -184,7 +185,7 @@ def read_expectations_matview(
     ``v3_suite`` result frame."""
     suite = _read_suite(state_path)
     counts_path = os.path.join(state_path, "counts")
-    _recover_state(counts_path)
+    heal_swap(counts_path)
     acc: dict[int, tuple[int, int]] = {}
     if Path(counts_path).exists():
         for r in spark.read.parquet(counts_path).collect():

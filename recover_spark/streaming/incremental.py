@@ -29,6 +29,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
 
+from recover_spark.sources.atomic import (
+    APPEND_MARKER,
+    commit_dir,
+    heal_swap,
+    replayed,
+    write_text_atomic,
+)
+
 
 def incremental_ingest(
     spark: SparkSession,
@@ -293,23 +301,13 @@ def pipeline_tables_from_state(
     index_fields: tuple[str, ...] | list[str],
 ) -> dict[str, DataFrame]:
     """Read the maintained state and produce the pipeline's output
-    tables — the same flat-vs-nested routing as the batch
-    ``DatasetPipeline.build`` (relationalize when nested, identity
-    otherwise), with the layout bucket stripped as a synthetic
-    partition column."""
+    tables through the batch pipeline's ``route_tables``, with the
+    layout bucket stripped as a synthetic partition column."""
     from recover_spark.functions.transforms import drop_synthetic_partitions
-    from recover_spark.operators.relationalize import (
-        has_nested_fields,
-        relationalize,
-    )
+    from recover_spark.plans.pipeline import route_tables
 
     df = drop_synthetic_partitions(spark.read.parquet(state_root))
-    if has_nested_fields(df.schema):
-        carry = list(index_fields) + [
-            c for c in ("cohort", "ParticipantID") if c in df.columns
-        ]
-        return relationalize(df, name, carry_cols=carry)
-    return {name: df}
+    return route_tables(df, name, index_fields)
 
 
 def _migrate_legacy_unpartitioned(path: str) -> int:
@@ -478,15 +476,6 @@ def near_dedup_against_corpus(
         probe_text_index,
     )
 
-    marker = os.path.join(index_path, "_applied_batch")
-
-    def _applied() -> int:
-        try:
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return -1
-
     def _write_output(kept: DataFrame, batch_id: int) -> None:
         kept.withColumn("__batch", F.lit(batch_id)).write.mode(
             "overwrite"
@@ -495,7 +484,7 @@ def near_dedup_against_corpus(
         ).parquet(output_path)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _applied():
+        if replayed(index_path, batch_id, APPEND_MARKER):
             return
         _migrate_legacy_unpartitioned(output_path)
         pairs = cosine_threshold_pairs(
@@ -518,10 +507,9 @@ def near_dedup_against_corpus(
             kept = kept.localCheckpoint()
             _write_output(kept, batch_id)
             build_text_index(kept, index_path, id_col, text_col)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, marker)
+        write_text_atomic(
+            os.path.join(index_path, APPEND_MARKER), str(batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(_apply)
@@ -537,7 +525,7 @@ def compact_dedup_state(spark, state_path: str) -> dict:
     per-batch overwrite), so after a year of arrivals the anti-join
     pays one file-open per historical batch.  Compaction folds the
     distinct digests into a single ``__batch=-1`` partition via the
-    matview's crash-safe two-rename swap — a reader at any instant
+    crash-safe ``commit_dir`` swap — a reader at any instant
     sees either the old generation or the new, and the digest SET is
     identical before and after (dedup semantics are wholly insensitive
     to which partition a digest lives in).  Returns
@@ -548,9 +536,7 @@ def compact_dedup_state(spark, state_path: str) -> dict:
 
     from pyspark.sql import functions as _F
 
-    from recover_spark.streaming.matview import _commit_state, _recover_state
-
-    _recover_state(state_path)
+    heal_swap(state_path)
 
     def n_files() -> int:
         return len(
@@ -565,9 +551,8 @@ def compact_dedup_state(spark, state_path: str) -> dict:
         .distinct()
         .localCheckpoint(eager=True)  # materialize before the swap
     )
-    _commit_state(
+    commit_dir(
         state_path,
-        None,
         digests.withColumn("__batch", _F.lit(-1))
         .coalesce(1)
         .write.partitionBy("__batch")
@@ -605,17 +590,8 @@ def ingest_vectors_stream(
         build_ivf_index,
     )
 
-    marker = os.path.join(index_path, "_applied_batch")
-
-    def _applied() -> int:
-        try:
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return -1
-
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _applied():
+        if replayed(index_path, batch_id, APPEND_MARKER):
             return
         if os.path.isdir(os.path.join(index_path, "_centroids")):
             append_ivf_index(batch, index_path, id_col, vec_col)
@@ -624,10 +600,9 @@ def ingest_vectors_stream(
                 batch, index_path, n_centroids=n_centroids,
                 id_col=id_col, vec_col=vec_col,
             )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, marker)
+        write_text_atomic(
+            os.path.join(index_path, APPEND_MARKER), str(batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(_apply)

@@ -8,25 +8,16 @@ micro-batch contributes a PARTIAL aggregate (mergeable: counts/sums),
 merged into a persisted state table inside ``foreachBatch``.
 
 Exactly-once composition: the file-source checkpoint guarantees each
-input file is assigned to exactly one batch id, and the merge is made
-idempotent-per-batch-id by persisting the last-applied batch id inside
-the state directory (a ``_applied_batch_id`` sidecar, invisible to the
-parquet reader like ``_SUCCESS``) in the same atomic write-to-temp +
-swap as the state itself.  foreachBatch is at-least-once: a crash after
-the swap but before the checkpoint commit replays the batch — the
-sidecar check then skips it instead of double-counting, so replays
-after a crash converge to the same state (SURVEY.md §2.9).
-
-Every merge follows one commit protocol, in two private helpers that
-the drift, expectation and corpus-dedup states share:
-
-- ``_replayed(state_path, batch_id)`` heals a mid-swap crash
-  (``_recover_state``) and reports whether ``batch_id`` is already
-  applied, in which case the merge returns without work;
-- ``_commit_state(state_path, batch_id, write)`` clears a stale
-  ``.tmp``, lets ``write(tmp)`` produce the next generation there,
-  stamps the ``_applied_batch_id`` marker into it and swaps it in
-  (``_swap_state``).
+input file is assigned to exactly one batch id, and every merge commits
+through the one crash-safe protocol in ``recover_spark/sources/atomic.py``
+(heal -> replay guard -> write tmp -> batch-id marker -> two renames):
+``replayed(state_path, batch_id)`` skips a batch the state already
+holds, and ``commit_dir(state_path, write, batch_id)`` swaps in the
+next generation with its marker.  foreachBatch is at-least-once: a
+crash after the swap but before the checkpoint commit replays the
+batch, which the marker then skips instead of double-counting, so
+replays after a crash converge to the same state (SURVEY.md §2.9).
+The drift, expectation and corpus-dedup states use the same helpers.
 
 A state that grows with the data's keys folds in one Spark plan (the
 batch partial unioned with the previous state and re-aggregated), so
@@ -40,97 +31,15 @@ derived (sum/count) at read time, never stored.
 
 from __future__ import annotations
 
-import os
-import shutil
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-_BATCH_MARKER = "_applied_batch_id"
-
-
-def _recover_state(state_path: str) -> None:
-    """Heal a crash that struck mid-swap.
-
-    ``_swap_state`` renames the live state aside (``state.old``) before
-    promoting the new generation; a crash between the two renames
-    leaves no live state but an intact ``state.old``.  Restoring it
-    keeps every previously committed batch — the failed batch's marker
-    never landed, so its replay re-merges instead of silently starting
-    from an empty state (which would permanently undercount: the
-    checkpoint has already consumed the earlier input files).
-    """
-    old = state_path + ".old"
-    if os.path.exists(old) and not os.path.exists(state_path):
-        os.rename(old, state_path)
-
-
-def _swap_state(tmp: str, state_path: str) -> None:
-    """Crash-safe replace of the state dir with ``tmp``.
-
-    rmtree-then-move has a window where NO generation exists; two
-    renames (state -> state.old, tmp -> state) keep a complete
-    generation on disk at every instant, with ``_recover_state``
-    closing the between-renames window on the next run.
-    """
-    old = state_path + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(state_path):
-        os.rename(state_path, old)
-    os.rename(tmp, state_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _applied_batch_id(state_path: str) -> int | None:
-    marker = Path(state_path) / _BATCH_MARKER
-    if marker.exists():
-        try:
-            return int(marker.read_text().strip())
-        except ValueError:
-            return None
-    return None
-
-
-def _replayed(state_path: str, batch_id: int | None) -> bool:
-    """Heal a mid-swap crash, then tell whether ``batch_id`` is a
-    replay of an already-applied batch (the merge must skip it)."""
-    _recover_state(state_path)
-    if batch_id is None:
-        return False
-    applied = _applied_batch_id(state_path)
-    return applied is not None and batch_id <= applied
-
-
-def _commit_state(
-    state_path: str,
-    batch_id: int | None,
-    write: Callable[[str], object],
-) -> None:
-    """Commit the next state generation: ``write(tmp)`` fills a fresh
-    tmp dir, the batch-id marker lands inside it (so it swaps in
-    atomically with the state it describes), then the crash-safe
-    swap replaces the live generation."""
-    tmp = state_path + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    write(tmp)
-    if batch_id is not None:
-        (Path(tmp) / _BATCH_MARKER).write_text(str(batch_id))
-    _swap_state(tmp, state_path)
-
-
-def _write_arrow(table, tmp: str) -> None:
-    """``_commit_state`` writer for a driver-built Arrow table."""
-    import pyarrow.parquet as pq
-
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+from recover_spark.functions.local import write_arrow_table
+from recover_spark.sources.atomic import commit_dir, heal_swap, replayed
 
 
 def merge_counts(
@@ -152,7 +61,7 @@ def merge_counts(
     the persisted last-applied id is a crash replay and is skipped —
     this is what upgrades at-least-once foreachBatch to effectively-once.
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
@@ -171,7 +80,7 @@ def merge_counts(
     else:
         merged = partial
 
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_count_matview(
@@ -274,7 +183,7 @@ def read_cm_matview(
     a batch of query keys (min over the depth rows, absent cells 0)."""
     from recover_spark.ops.cmsketch import cm_estimate
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     return cm_estimate(
         state, queries, key_cols, value_col, depth, width,
@@ -301,7 +210,7 @@ def merge_distinct_sketches(
     replay would converge even without the batch-id sidecar; the
     sidecar still skips the wasted work.
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(
@@ -322,7 +231,7 @@ def merge_distinct_sketches(
     else:
         merged = partial
 
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_distinct_matview(
@@ -352,7 +261,7 @@ def maintain_distinct_matview(
 
 def read_distinct_matview(spark: SparkSession, state_path: str) -> DataFrame:
     """Materialize the estimates from the persisted sketch state."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     return spark.read.parquet(state_path).select(
         "*",
         F.round(F.hll_sketch_estimate(F.col("sketch")))
@@ -389,7 +298,7 @@ def merge_topk_summary(
     TakeOrdered — never an unbounded collect.  Crash-safety is the same
     rename-aside swap + batch-id sidecar as ``merge_counts``.
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(F.count(F.lit(1)).alias("weight"))
@@ -413,7 +322,7 @@ def merge_topk_summary(
             *keys, (F.col("weight") - F.lit(threshold)).alias("weight")
         ).filter(F.col("weight") > 0)
 
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_topk_matview(
@@ -445,7 +354,7 @@ def read_topk_matview(
 ) -> DataFrame:
     """Current top-N from the bounded summary (weights = lower bounds,
     deterministic tie-break weight desc / keys asc)."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     keys = [c for c in state.columns if c != "weight"]
     order = [F.col("weight").desc()] + [F.col(k).asc() for k in keys]
@@ -479,7 +388,7 @@ def merge_quantile_sketches(
     aggregates): no Python, no UDF, map-side partial sketches before
     the key shuffle.
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     partial = batch.groupBy(*keys).agg(
@@ -504,7 +413,7 @@ def merge_quantile_sketches(
     else:
         merged = partial
 
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_quantile_matview(
@@ -538,7 +447,7 @@ def read_quantile_matview(
     ranks: Sequence[float] = (0.5, 0.95, 0.99),
 ) -> DataFrame:
     """Materialize per-key quantile estimates from the sketch state."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     df = spark.read.parquet(state_path)
     cols = [c for c in df.columns if c != "sketch"]
     for r in ranks:
@@ -631,7 +540,7 @@ def merge_corr_moments(
     Crash-safe via the shared sidecar swap; replay of an applied
     batch id is a no-op.
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     cols = list(cols)
     if len(set(cols)) != len(cols):
@@ -697,7 +606,9 @@ def merge_corr_moments(
             [v[j] for _, v in rows], type=pa.float64()
         )
     table = pa.table(cols_out)
-    _commit_state(state_path, batch_id, lambda tmp: _write_arrow(table, tmp))
+    commit_dir(
+        state_path, lambda tmp: write_arrow_table(table, tmp), batch_id
+    )
 
 
 def maintain_corr_matview(
@@ -725,7 +636,7 @@ def read_corr_matview(spark: SparkSession, state_path: str) -> DataFrame:
     """Materialize correlations/covariances from the moment state:
     corr = C / sqrt(M2a * M2b), cov_samp = C / (n - 1); degenerate
     pairs (zero variance, n < 2) surface as NULL via try_divide."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     return st.select(
         "col_a",
@@ -761,7 +672,7 @@ def merge_calibration_state(
     """
     from recover_spark.ops.classifier_eval import _binned
 
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(group_cols)
     partial = _binned(
@@ -780,7 +691,7 @@ def merge_calibration_state(
                 F.sum("__sq").alias("__sq"),
             )
         )
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_calibration_matview(
@@ -832,7 +743,7 @@ def read_calibration_matview(
     rule)."""
     from recover_spark.ops.classifier_eval import fold_calibration_summary
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     return fold_calibration_summary(st, list(group_cols), round_digits)
 
@@ -847,7 +758,7 @@ def read_reliability_matview(
     zero extra state (the four-lens drift-matview lesson)."""
     from recover_spark.ops.classifier_eval import fold_reliability
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     return fold_reliability(st, list(group_cols), round_digits)
 
@@ -875,7 +786,7 @@ def read_auc_matview(
     ``try_divide``."""
     from pyspark.sql import Window
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     keys = list(group_cols)
     st = spark.read.parquet(state_path).select(
         *keys,
@@ -923,7 +834,7 @@ def merge_heartbeat_state(
     and count are both mergeable, so the union + re-aggregate over
     partials equals the aggregate over everything seen (the
     ``merge_counts`` contract with the same batch-id sidecar)."""
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     partial = (
@@ -945,7 +856,7 @@ def merge_heartbeat_state(
                 F.sum("n_rows").cast("long").alias("n_rows"),
             )
         )
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_heartbeat_matview(
@@ -987,7 +898,7 @@ def read_heartbeat_matview(
     (one-row broadcast), not the wall clock, so the report is a
     deterministic function of the state (replayable, testable, and
     meaningful on backfills where "now" is wrong by construction)."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     frontier = st.agg(F.max("last_seen").alias("__frontier"))
     out = st.crossJoin(F.broadcast(frontier))
@@ -1035,7 +946,7 @@ def merge_upsert_state(
     """
     from pyspark.sql import Window
 
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     order = list(order_cols)
@@ -1052,7 +963,7 @@ def merge_upsert_state(
         .drop("__rn")
     )
 
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_upsert_matview(
@@ -1085,7 +996,7 @@ def read_upsert_matview(spark: SparkSession, state_path: str) -> DataFrame:
     their own schema; before any batch this raises like any missing
     parquet read — the matview family's read-side contract is that
     maintain ran at least once)."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     return spark.read.parquet(state_path)
 
 
@@ -1122,7 +1033,7 @@ def merge_vector_sums(
     over all rows seen, and state size stays O(keys x dim) forever.
     Same crash-replay contract as ``merge_counts`` (batch-id marker
     travels inside the atomically-swapped state dir)."""
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     partial_aggs, merge_aggs = _vector_expr_bundle(vec_col, int(dim))
@@ -1131,7 +1042,7 @@ def merge_vector_sums(
     if Path(state_path).exists():
         prev = spark.read.parquet(state_path)
         merged = prev.unionByName(partial).groupBy(*keys).agg(*merge_aggs)
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_vector_matview(
@@ -1174,7 +1085,7 @@ def read_embedding_drift_matview(
     carries exact mergeable sums, the read equals the batch operator
     over the union of all batches (maintenance is invisible, the
     matview contract)."""
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     nd = F.col("n_rows").cast("double")
     cent = st.select(
@@ -1259,7 +1170,7 @@ def merge_sample_state(
 
     from recover_spark.functions.hashing import portable_hash64
 
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     w = Window.partitionBy(*keys).orderBy("h")
@@ -1285,7 +1196,7 @@ def merge_sample_state(
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_sample_matview(
@@ -1322,7 +1233,7 @@ def read_sample_matview(
     hash — the member every correct replay agrees on first)."""
     from pyspark.sql import Window
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     keys = [c for c in state.columns if c not in ("h", "payload")]
     w = Window.partitionBy(*keys).orderBy("h")
@@ -1350,7 +1261,7 @@ def read_sample_overlap(
     """
     from recover_spark.ops.kmv import kmv_pairwise_overlap
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     sk = state.groupBy(key_col).agg(
         F.array_sort(F.collect_list("h")).alias("kmv")
@@ -1372,7 +1283,7 @@ def read_isotonic_matview(
     the same binning (ops/classifier_eval.isotonic_fit_cells)."""
     from recover_spark.ops.classifier_eval import isotonic_fit_cells
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     st = spark.read.parquet(state_path)
     cells = st.select(
         *group_cols,
@@ -1407,7 +1318,7 @@ def merge_bootstrap_state(
         bootstrap_replicate_partials,
     )
 
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     keys = list(key_cols)
     # The replicate fan-out is n_replicates x the batch's rows of
@@ -1436,7 +1347,7 @@ def merge_bootstrap_state(
                 F.sum("__c").alias("__c"),
             )
         )
-    _commit_state(state_path, batch_id, partial.write.parquet)
+    commit_dir(state_path, partial.write.parquet, batch_id)
 
 
 def maintain_bootstrap_matview(
@@ -1488,7 +1399,7 @@ def read_bootstrap_matview(
     rows ever streamed."""
     from recover_spark.operators.analytics import bootstrap_summarize
 
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     return bootstrap_summarize(
         state, list(key_cols), n_replicates, alpha, round_digits
@@ -1546,7 +1457,7 @@ def merge_sequence_state(
     growing state (refuse-to-degrade).  Same crash-replay idempotence
     as every matview here (batch-id sidecar inside the atomic swap).
     """
-    if _replayed(state_path, batch_id):
+    if replayed(state_path, batch_id):
         return
     enc, ev = _sequence_expr_bundle(
         ts_col, type_col, tuple(sorted(alphabet.items())),
@@ -1612,7 +1523,7 @@ def merge_sequence_state(
             )
         ),
     )
-    _commit_state(state_path, batch_id, merged.write.parquet)
+    commit_dir(state_path, merged.write.parquet, batch_id)
 
 
 def maintain_pattern_matview(
@@ -1667,7 +1578,7 @@ def read_pattern_matview(
     the full data (maintenance must be invisible)."""
     if not patterns:
         raise ValueError("patterns must be non-empty")
-    _recover_state(state_path)
+    heal_swap(state_path)
     state = spark.read.parquet(state_path)
     seq = F.concat_ws(
         "", F.transform(F.array_sort(F.col("events")), lambda x: x["__ch"])

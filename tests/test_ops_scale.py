@@ -600,13 +600,13 @@ def test_ivf_compact_and_rebuild_lifecycle(spark, tmp_path):
     # .old on disk; the next maintenance entry must restore it rather
     # than find no index (same contract as the matview state swap).
     os.rename(idx, idx + ".old")
-    from recover_spark.ops.similarity import _heal_ivf_swap
+    from recover_spark.sources.atomic import heal_swap
 
-    assert _heal_ivf_swap(idx) is True
+    assert heal_swap(idx) is True
     assert os.path.exists(idx) and not os.path.exists(idx + ".old")
     assert probe() == rebuilt_pairs
     # idempotent when the index is live
-    assert _heal_ivf_swap(idx) is False
+    assert heal_swap(idx) is False
 
 
 def test_ivf_delete_equals_index_without_vectors(spark, tmp_path):

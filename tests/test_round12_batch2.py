@@ -674,13 +674,13 @@ class TestIndexBuildAtomicity:
         assert not ivf_index_complete(idx)  # isdir() would have lied
         build_ivf_index(emb, idx, n_centroids=4)
         assert ivf_index_complete(idx)
-        assert not os.path.isdir(idx + ".build.tmp")  # tmp swapped away
+        assert not os.path.isdir(idx + ".tmp")  # tmp swapped away
         assert not pq_sidecar_complete(idx)
         build_pq_sidecar(
             spark, idx, m_subspaces=4, n_codes=4, dim=64
         )
         assert pq_sidecar_complete(idx)
-        assert not os.path.isdir(os.path.join(idx, "_pq.build.tmp"))
+        assert not os.path.isdir(os.path.join(idx, "_pq.tmp"))
         # and the rebuilt index actually answers
         q = emb.filter(F.col("vec_id") < 2)
         assert ivf_topk_indexed(spark, idx, q, nprobe=2, k=3).count() > 0

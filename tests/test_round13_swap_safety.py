@@ -31,7 +31,7 @@ class TestIvfBuildSwap:
         build_ivf_index(_emb(spark, 200), idx, n_centroids=4)
         assert ivf_index_complete(idx)
         assert not os.path.exists(idx + ".old")
-        assert not os.path.exists(idx + ".build.tmp")
+        assert not os.path.exists(idx + ".tmp")
         q = _emb(spark, 3)
         out = ivf_topk_indexed(spark, idx, q, nprobe=4, k=3).collect()
         assert len(out) > 0
@@ -81,7 +81,7 @@ class TestPqSidecarSwap:
         build_pq_sidecar(spark, idx, m_subspaces=4, n_codes=4, dim=64)
         assert pq_sidecar_complete(idx)
         assert not os.path.exists(f"{idx}/_pq.old")
-        assert not os.path.exists(f"{idx}/_pq.build.tmp")
+        assert not os.path.exists(f"{idx}/_pq.tmp")
         # crash window: only _pq.old on disk -> probe heals, query runs
         os.rename(f"{idx}/_pq", f"{idx}/_pq.old")
         assert pq_sidecar_complete(idx)

@@ -538,7 +538,7 @@ class TestBlockedLinkage:
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-# -- partition maintenance (dynamic overwrite + compaction) -----------------
+# -- partition maintenance (dynamic overwrite) ------------------------------
 
 
 class TestPartitionMaintenance:
@@ -564,47 +564,6 @@ class TestPartitionMaintenance:
         assert spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode"
         ) == "static"
-
-    def test_compaction_reduces_files_keeps_rows(self, spark, tmp_path):
-        from pathlib import Path
-
-        from recover_spark.sources.writers import compact_partitions
-
-        path = str(tmp_path / "t")
-        df = spark.range(0, 10_000).select(
-            (F.col("id") % 2).cast("string").alias("p"), F.col("id").alias("v")
-        )
-        # fragment: many small files per partition
-        df.repartition(20).write.partitionBy("p").parquet(path)
-        n_before = len(list(Path(path).glob("p=*/*.parquet")))
-        before = {r.v for r in spark.read.parquet(path).collect()}
-        compact_partitions(spark, path, ["p"], target_records_per_file=100_000)
-        n_after = len(list(Path(path).glob("p=*/*.parquet")))
-        after = {r.v for r in spark.read.parquet(path).collect()}
-        assert after == before
-        assert n_after < n_before / 4
-
-    def test_predicate_limits_compaction_scope(self, spark, tmp_path):
-        from pathlib import Path
-
-        from recover_spark.sources.writers import compact_partitions
-
-        path = str(tmp_path / "t")
-        df = spark.range(0, 2000).select(
-            (F.col("id") % 2).cast("string").alias("p"), F.col("id").alias("v")
-        )
-        df.repartition(10).write.partitionBy("p").parquet(path)
-        files_b_before = sorted(
-            str(f) for f in Path(path).glob("p=1/*.parquet")
-        )
-        compact_partitions(spark, path, ["p"], predicate="p = '0'")
-        files_b_after = sorted(
-            str(f) for f in Path(path).glob("p=1/*.parquet")
-        )
-        assert files_b_after == files_b_before  # untouched partition intact
-        assert len(list(Path(path).glob("p=0/*.parquet"))) <= 2
-        got = {r.v for r in spark.read.parquet(path).collect()}
-        assert got == set(range(2000))
 
 
 # -- leakage-safe grouped split ---------------------------------------------
@@ -1012,17 +971,3 @@ class TestIntervalOverlapEmpty:
             "k string, r_id long, r_start timestamp, r_end timestamp",
         )
         assert interval_overlap_join(left, right, on=["k"]).count() == 0
-
-
-class TestCompactionPredicateGuard:
-    def test_row_level_predicate_rejected(self, spark, tmp_path):
-        from recover_spark.sources.writers import compact_partitions
-
-        path = str(tmp_path / "t")
-        spark.range(0, 100).select(
-            (F.col("id") % 2).cast("string").alias("p"), F.col("id").alias("v")
-        ).write.partitionBy("p").parquet(path)
-        with pytest.raises(ValueError, match="partition columns"):
-            compact_partitions(spark, path, ["p"], predicate="v > 5")
-        # nothing was rewritten
-        assert spark.read.parquet(path).count() == 100

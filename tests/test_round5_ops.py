@@ -137,34 +137,6 @@ class TestBloomColumnCollisions:
         }
 
 
-# -- non-deterministic compaction predicate ---------------------------------
-
-
-class TestCompactionDeterminismGuard:
-    def test_rand_predicate_rejected_dataset_untouched(self, spark, tmp_path):
-        from recover_spark.sources.writers import compact_partitions
-
-        path = str(tmp_path / "t")
-        spark.range(0, 100).select(
-            (F.col("id") % 2).cast("string").alias("p"), F.col("id").alias("v")
-        ).write.partitionBy("p").parquet(path)
-        with pytest.raises(ValueError, match="deterministic"):
-            compact_partitions(spark, path, ["p"], predicate="rand() < 0.5")
-        assert spark.read.parquet(path).count() == 100
-
-    def test_deterministic_partition_predicate_still_accepted(
-        self, spark, tmp_path
-    ):
-        from recover_spark.sources.writers import compact_partitions
-
-        path = str(tmp_path / "t")
-        spark.range(0, 100).select(
-            (F.col("id") % 2).cast("string").alias("p"), F.col("id").alias("v")
-        ).write.partitionBy("p").parquet(path)
-        compact_partitions(spark, path, ["p"], predicate="p = '0'")
-        assert spark.read.parquet(path).count() == 100
-
-
 # -- linkage length-band prefilter ------------------------------------------
 
 

@@ -106,6 +106,48 @@ def test_append_extends_the_probed_corpus(spark, tmp_path):
     assert got_all == _brute_cross(spark, _OLD + second, _NEW, 0.5)
 
 
+def _drop_coverage_flag(path):
+    """Rewrite the meta the way an index built before the
+    ``vectors_cover_corpus`` flag existed looks: vectors/ present, no
+    flag."""
+    import json
+    import os
+
+    from recover_spark.ops.text_index import META_NAME
+
+    meta_path = os.path.join(path, META_NAME)
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    del meta["vectors_cover_corpus"]
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh, sort_keys=True)
+
+
+def test_pre_flag_index_probe_sees_appended_docs(spark, tmp_path):
+    """On an index without the coverage flag, appends stop maintaining
+    vectors/, so ``auto`` must not pick the dense scan of it."""
+    path = str(tmp_path / "idx")
+    build_text_index(_corpus(spark, _OLD), path, num_buckets=8)
+    _drop_coverage_flag(path)
+    second = [(11, "completely separate second wave of documents here")]
+    append_text_index(_corpus(spark, second), path)
+    probe = [(201, "completely separate second wave of documents here")]
+    got = probe_text_index(
+        _corpus(spark, probe), path, 0.9, strategy="auto"
+    ).collect()
+    assert {(r.new_id, r.indexed_id, r.cosine) for r in got} == {
+        (201, 11, 1.0)
+    }
+
+
+def test_pre_flag_index_refuses_explicit_dense(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    build_text_index(_corpus(spark, _OLD), path, num_buckets=8)
+    _drop_coverage_flag(path)
+    with pytest.raises(ValueError, match="vectors_cover_corpus"):
+        probe_text_index(_corpus(spark, _NEW), path, 0.9, strategy="dense")
+
+
 def test_probe_scan_is_partition_pruned(spark, tmp_path):
     """The postings scan must carry PartitionFilters on the bucket
     column — the probe reads only the buckets its own terms hash
