@@ -39,17 +39,23 @@ def test_sessionize_stream_smoke(spark, tmp_path):
     schema = parse_type("struct<user_id:long,ts:timestamp,value:double>")
     stream = spark.readStream.schema(schema).json(str(src))
     sessions = sessionize_stream(stream, gap_seconds=1)
+    # A processing-time timeout makes Spark run no-data batches for as
+    # long as the query lives, so an availableNow run never terminates;
+    # a once trigger runs the one data batch and stops.
     q = (
         sessions.writeStream.format("memory")
         .queryName("sessions_out")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .outputMode("append")
-        .trigger(availableNow=True)
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
-    # availableNow run processes the batch; emission needs a later
-    # timeout tick, so the table exists (possibly empty) without error.
+    try:
+        assert q.awaitTermination(120), "a once-trigger run terminates"
+    finally:
+        q.stop()
+    # The run processes the batch; emission needs a later timeout
+    # tick, so the table exists (possibly empty) without error.
     assert spark.table("sessions_out").columns == [
         "user_id",
         "session_start",
