@@ -10,11 +10,9 @@ from recover_spark.functions.transforms import (
 )
 from recover_spark.functions.hashing import portable_hash64, portable_hash_hex
 from recover_spark.functions.text import (
-    char_ngrams,
     quality_features,
     token_count,
     tokens,
-    word_ngrams,
 )
 from recover_spark.functions.vectors import cosine_similarity, dot, l2_norm
 
@@ -29,11 +27,9 @@ __all__ = [
     "map_to_offset_array",
     "portable_hash64",
     "portable_hash_hex",
-    "char_ngrams",
     "quality_features",
     "token_count",
     "tokens",
-    "word_ngrams",
     "cosine_similarity",
     "dot",
     "l2_norm",

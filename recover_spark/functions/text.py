@@ -81,26 +81,6 @@ def word_ngrams_all_of(toks: Column, n: int = 2) -> Column:
     )
 
 
-def word_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles -> array<string> ('a b c' joined).
-
-    Convenience single-expression form; for hot paths materialize
-    ``tokens(col)`` into its own projection and use ``word_ngrams_of``
-    (see that docstring for why).
-    """
-    return word_ngrams_of(tokens(col), n)
-
-
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-gram shingles -> array<string>."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.lower(c)
-    grams = F.transform(
-        _window_starts(F.length(s), n), lambda i: F.substring(s, i, n)
-    )
-    return F.array_distinct(grams)
-
-
 def stopword_ratio(
     col: Column | str,
     stopwords: list[str] | None = None,

@@ -17,14 +17,15 @@ beyond AQE's automatic broadcast/skew handling:
   bucket keys is shuffle-free (SortMergeJoin with no Exchange on either
   side) for ALL downstream jobs — the amortized answer when the same
   join runs weekly, as the reference's pipeline does
-  (templates/glue-workflow.j2:66).
+  (templates/glue-workflow.j2:66).  It lives in sources/bucketed.py
+  (``write_bucketed_table`` / ``colocated_join``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -59,36 +60,3 @@ def salted_join(
     out = b.join(s, on=on + ["__salt"], how=how)
     return out.drop("__salt")
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` bucketed (and optionally sorted) by the join keys.
-
-    Thin front for the canonical implementation in
-    ``sources/bucketed.py:write_bucketed_table`` (which also enforces
-    the one-file-per-bucket invariant that makes the written sort order
-    trustable)."""
-    from recover_spark.sources.bucketed import write_bucketed_table
-
-    write_bucketed_table(
-        df, table, bucket_cols, num_buckets, sort_cols=sort_cols, mode=mode
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """Join two bucketed tables on their bucket keys (shuffle-free).
-
-    Delegates to ``sources/bucketed.py:colocated_join`` — SortMergeJoin
-    pinned via merge hint, zero Exchange with matching bucket layouts.
-    """
-    from recover_spark.sources.bucketed import colocated_join
-
-    return colocated_join(spark, left_table, right_table, on=list(on), how=how)

@@ -14,9 +14,7 @@ from pyspark.sql import functions as F
 
 from recover_spark.functions.hashing import portable_hash64
 from recover_spark.functions.text import (
-    bpe_token_estimate,
     quality_features,
-    token_count,
     tokens,
     word_ngrams_of,
 )
@@ -68,20 +66,6 @@ def language_id_from_tokens(toks: Column, default: str = "unknown") -> Column:
     )
     best = F.array_max(F.filter(pairs, lambda p: p["score"] > 0))
     return F.coalesce(best["lang"], F.lit(default))
-
-
-def text_profile(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document analysis record: token counts, quality features,
-    heuristic language."""
-    return df.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        bpe_token_estimate(text_col).alias("n_bpe_tokens"),
-        quality_features(text_col).alias("quality"),
-        language_id(text_col).alias("lang_guess"),
-    )
 
 
 def fingerprint_of(toks: Column, window: int = 8) -> Column:

@@ -11,24 +11,22 @@ a fixed-size bitmap per (file, column) that answers "definitely absent
 / maybe present", so an equality scan schedules only the files that
 might contain the key.
 
-Design (deliberately parallel to the zone-map module):
-- ``build_bloommap`` runs one distributed ``mapInPandas`` job over the
-  file list; each task reads ONLY the tracked columns of its files
-  (columnar projection — a fraction of file bytes) and folds the
-  values into an m-bit bitmap with k hashes (double hashing from a
-  blake2b digest — deterministic across runs, processes, and engines;
-  this manifest outlives the Spark session that built it, so a
-  seed-dependent hash would poison every later read).  The manifest
-  lands as a ``_bloommap.json`` sidecar (base64 bitmaps), atomically
-  promoted.
-- ``read_point_pruned`` keeps files where EVERY queried column says
-  "maybe" for AT LEAST ONE of its requested values (IN-list
-  semantics), plus files the manifest has never seen, then reapplies
-  the exact IN filter — the same superset guarantee as zone maps: a
-  stale or missing manifest costs performance, never rows.
-- ``refresh_bloommap`` reconciles appends/deletes incrementally:
-  stats for new files only, dead entries dropped, existing bitmaps
-  reused verbatim (files are immutable once written).
+Design — listing, the distributed per-file scan, refresh, the
+``_bloommap.json`` sidecar and the staleness and superset rules live in
+sources/pruning.py, shared with zone maps; this module supplies:
+- the per-file fold: each task reads ONLY the tracked columns of its
+  files (columnar projection — a fraction of file bytes) and folds the
+  values into an m-bit bitmap with k hashes (double hashing from
+  splitmix64 for integers, blake2b for strings and bytes — deterministic
+  across runs, processes, and engines; this manifest outlives the Spark
+  session that built it, so a seed-dependent hash would poison every
+  later read), stored base64 in the entry;
+- the keep rule of ``read_point_pruned``: a file stays when EVERY
+  queried column says "maybe" for AT LEAST ONE of its requested values
+  (IN-list semantics), and the exact IN filter reapplies on top.  A
+  probe whose type is not the column's storage type (a string probe
+  on an integer column, or the reverse) hashes differently from the
+  column's values, so it says "maybe" for every file.
 
 Sizing: the manifest is O(files x columns x bits/8) — at the 8 KiB
 default (bits=1<<16) a 100k-file table carries ~800 MB of bitmap per
@@ -49,17 +47,15 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import json
-import os
-from collections.abc import Iterator, Mapping, Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recover_spark.sources.atomic import write_text_atomic
+from recover_spark.sources import pruning
 
-MANIFEST_NAME = "_bloommap.json"
-
+# Spark column types whose values the build folds as integers.
+_INT_TYPES = {"tinyint", "smallint", "int", "bigint", "boolean"}
 
 _MASK = (1 << 64) - 1
 _GOLDEN = 0x9E3779B97F4A7C15
@@ -82,10 +78,11 @@ def _bit_positions(v, bits: int, k: int) -> list[int] | None:
     build uses; strings/bytes take blake2b.  Both are seedless and
     process-independent — the manifest outlives the session that built
     it, so a salted hash (Python's own hash(), Spark's xxhash64 seed)
-    would poison every later read.  The two families never collide
-    because a probe value's Python type matches its column's storage
-    type.  Floats are rejected: binary64 equality is not a pruning
-    predicate, and a quiet str() round trip would split 1.0 from 1.
+    would poison every later read.  The two families do not agree on
+    any value, so ``_maybe_contains`` answers "maybe" for a probe of
+    the other family.  Floats are rejected: binary64 equality is not a
+    pruning predicate, and a quiet str() round trip would split 1.0
+    from 1.
     """
     if v is None:
         return None
@@ -132,14 +129,15 @@ def _fold_int_array(bm, arr, bits: int, k: int) -> None:
         )
 
 
-def _fold_file(path: str, columns: Sequence[str], bits: int, k: int) -> dict:
+def _fold_file(path: str, manifest: dict) -> dict:
     """Bloom bitmaps for one file, reading only the tracked columns."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    bits, k = manifest["bits"], manifest["num_hashes"]
     pf = pq.ParquetFile(path)
-    present = [c for c in columns if c in pf.schema_arrow.names]
+    present = [c for c in manifest["tracked_columns"] if c in pf.schema_arrow.names]
     bitmaps = {c: np.zeros(bits // 8, dtype=np.uint8) for c in present}
     for batch in pf.iter_batches(columns=present, batch_size=65536):
         for c in present:
@@ -161,38 +159,6 @@ def _fold_file(path: str, columns: Sequence[str], bits: int, k: int) -> dict:
     }
 
 
-def _scan_entries(
-    spark: SparkSession, files: Sequence[str], cols: Sequence[str],
-    bits: int, k: int,
-) -> list[dict]:
-    import pandas as pd
-
-    files_df = spark.createDataFrame([(f,) for f in files], "file string")
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            entries = [
-                json.dumps(_fold_file(f, cols, bits, k), sort_keys=True)
-                for f in b["file"]
-            ]
-            yield pd.DataFrame({"entry": entries})
-
-    rows = (
-        files_df.repartition(min(len(files), 32) or 1)
-        .mapInPandas(scan, "entry string")
-        .collect()
-    )
-    return [json.loads(r["entry"]) for r in rows]
-
-
-def _list_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith("_")
-    )
-
-
 def build_bloommap(
     spark: SparkSession,
     path: str,
@@ -201,37 +167,18 @@ def build_bloommap(
     num_hashes: int = 5,
     manifest_path: str | None = None,
 ) -> dict:
-    """Build and persist the per-file Bloom manifest for ``path``.
-
-    Distributed over the cluster (one columnar projection read per
-    file, trivially parallel); the driver only assembles O(files)
-    manifest entries — the bounded-metadata pattern every table format
-    uses.
-    """
+    """Build and persist the per-file Bloom manifest for ``path``
+    (``_bloommap.json`` under ``path`` unless ``manifest_path``)."""
     if bits & (bits - 1):
         raise ValueError("bits must be a power of two")
-    files = _list_files(path)
-    if not files:
-        raise FileNotFoundError(
-            f"build_bloommap: no top-level parquet files under {path!r} "
-            "(hive-partitioned dataset? bloom maps apply to flat "
-            "layouts; partition pruning already covers partitioned ones)"
-        )
-    manifest = {
-        "path": path,
+    settings = {
         "tracked_columns": list(columns),
         "bits": bits,
         "num_hashes": num_hashes,
-        "files": sorted(
-            _scan_entries(spark, files, list(columns), bits, num_hashes),
-            key=lambda e: e["file"],
-        ),
     }
-    write_text_atomic(
-        manifest_path or os.path.join(path, MANIFEST_NAME),
-        json.dumps(manifest, sort_keys=True),
+    return pruning.build(
+        spark, path, "bloommap", settings, _fold_file, manifest_path
     )
-    return manifest
 
 
 def refresh_bloommap(
@@ -239,38 +186,14 @@ def refresh_bloommap(
     path: str,
     manifest_path: str | None = None,
 ) -> dict:
-    """Incrementally reconcile the manifest with the directory: bitmap
-    builds for ONLY the files absent from the manifest, dead entries
-    dropped, existing entries reused verbatim (immutable-file
-    contract).  Cost: O(new files) column reads."""
-    target = manifest_path or os.path.join(path, MANIFEST_NAME)
-    if not os.path.exists(target):
-        raise FileNotFoundError(
-            f"refresh_bloommap: no manifest at {target!r}; run "
-            "build_bloommap first"
-        )
-    with open(target) as fh:
-        manifest = json.load(fh)
-    current = set(_list_files(path))
-    kept = [e for e in manifest["files"] if e["file"] in current]
-    new_files = sorted(current - {e["file"] for e in kept})
-    if new_files:
-        kept.extend(
-            _scan_entries(
-                spark,
-                new_files,
-                manifest["tracked_columns"],
-                manifest["bits"],
-                manifest["num_hashes"],
-            )
-        )
-    manifest["files"] = sorted(kept, key=lambda e: e["file"])
-    write_text_atomic(target, json.dumps(manifest, sort_keys=True))
-    return manifest
+    """Reconcile the manifest with the directory: bitmaps for ONLY the
+    files absent from it, dead entries dropped, columns and sizing
+    inherited.  Cost: O(new files) column reads."""
+    return pruning.refresh(spark, path, "bloommap", _fold_file, manifest_path)
 
 
 def _maybe_contains(
-    entry: dict, col: str, values: Sequence, bits: int, k: int
+    entry: dict, col: str, values: Sequence, bits: int, k: int, int_column: bool
 ) -> bool:
     b64 = entry.get("columns", {}).get(col)
     if b64 is None:
@@ -280,6 +203,8 @@ def _maybe_contains(
         pos = _bit_positions(v, bits, k)
         if pos is None:
             continue  # NULL matches nothing
+        if isinstance(v, int) != int_column:
+            return True  # hashed unlike the column's values: no info
         if all(bm[p >> 3] & (1 << (p & 7)) for p in pos):
             return True
     return False
@@ -295,43 +220,26 @@ def read_point_pruned(
     point predicate — conjunctive across columns, IN-list (disjunctive)
     within a column — with the exact filter reapplied on top.
 
-    Returns ``(df, report)`` with ``files_total`` / ``files_read``.
-    Staleness rules mirror zone maps: missing manifest or a dead entry
-    -> full scan; appended unknown files -> always scanned.
+    Returns ``(df, report)`` with ``files_total`` / ``files_read``;
+    the staleness rules are those of sources/pruning.py.
     """
     points = {c: list(vs) for c, vs in points.items()}
-    target = manifest_path or os.path.join(path, MANIFEST_NAME)
-    if not os.path.exists(target):
-        df = spark.read.parquet(path)
-        return _apply_points(df, points), {
-            "files_total": None, "files_read": None,
-        }
-    with open(target) as fh:
-        manifest = json.load(fh)
-    bits, k = manifest["bits"], manifest["num_hashes"]
-    current = set(_list_files(path))
-    known = {e["file"] for e in manifest["files"]}
-    if known - current:
-        df = spark.read.parquet(path)
-        return _apply_points(df, points), {
-            "files_total": len(current),
-            "files_read": len(current),
-            "stale_manifest": True,
-        }
-    unknown = sorted(current - known)
-    kept = [
-        e["file"]
-        for e in manifest["files"]
-        if all(
-            _maybe_contains(e, c, vs, bits, k) for c, vs in points.items()
+
+    def keep_for(manifest: dict):
+        bits, k = manifest["bits"], manifest["num_hashes"]
+        ints = {c: manifest["column_types"].get(c) in _INT_TYPES for c in points}
+        return lambda e: all(
+            _maybe_contains(e, c, vs, bits, k, ints[c]) for c, vs in points.items()
         )
-    ] + unknown
-    report = {"files_total": len(current), "files_read": len(kept)}
-    if not kept:
-        df = spark.read.parquet(path).limit(0)
-        return _apply_points(df, points), report
-    df = spark.read.parquet(*kept)
-    return _apply_points(df, points), report
+
+    return pruning.read(
+        spark,
+        path,
+        "bloommap",
+        keep_for,
+        lambda df: _apply_points(df, points),
+        manifest_path,
+    )
 
 
 def _apply_points(df: DataFrame, points: Mapping[str, Sequence]) -> DataFrame:

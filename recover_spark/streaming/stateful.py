@@ -41,6 +41,10 @@ def sessionize_stream(
 
     Emits a session row when no event for the key arrives within
     ``gap_seconds`` (processing-time timeout).
+
+    Only a continuous (processing-time) or once trigger suits it: with
+    a processing-time timeout Spark runs another no-data batch after
+    every batch, so an ``availableNow`` run never terminates.
     """
 
     def update(

@@ -173,3 +173,16 @@ def test_scalar_and_vectorized_hash_agree():
     for v in values:
         for p in _bit_positions(v, bits, k):
             assert bm[p >> 3] & (1 << (p & 7)), (v, p)
+
+
+def test_type_mismatched_probe_keeps_rows(spark, tmp_path):
+    """A string probe on an integer column hashes unlike the column's
+    values; Spark's ``isin`` still matches it, so no file may be
+    pruned for it."""
+    path = str(tmp_path / "ds")
+    df = _scattered(spark, path, n=1_000, files=4)
+    build_bloommap(spark, path, ["k"])
+    pruned, _ = read_point_pruned(spark, path, {"k": ["5"]})
+    expect = sorted(map(tuple, df.filter(F.col("k").isin(["5"])).collect()))
+    assert len(expect) == 1
+    assert sorted(map(tuple, pruned.collect())) == expect

@@ -75,3 +75,22 @@ def test_column_set_diff(spark):
         "left_only": ["y"],
         "right_only": ["z"],
     }
+
+
+def test_comparison_report_text(spark):
+    """K8: the text report counts each kind of difference and lists
+    per-column match stats and a mismatch sample."""
+    from recover_spark.operators.diff import comparison_report
+
+    l = _df(spark, [("p1", "l1", 100.0, "NYC"), ("p2", "l2", 2.0, "b")])
+    r = _df(spark, [("p1", "l1", 105.0, "NYC"), ("p3", "l3", 3.0, "c")])
+    lines = comparison_report(
+        compare_datasets(l, r, ["pid", "logid"])
+    ).splitlines()
+    assert lines[0] == "Dataset comparison report"
+    assert "rows only in left:   1" in lines
+    assert "rows only in right:  1" in lines
+    assert "rows with mismatch:  1" in lines
+    assert "  calories: compared=1 equal=0 unequal=1" in lines
+    assert "  city: compared=1 equal=1 unequal=0" in lines
+    assert "mismatch sample (up to 20):" in lines

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from recover_spark.operators.joins import bucketed_join, salted_join, write_bucketed
+from recover_spark.operators.joins import salted_join
+from recover_spark.sources.bucketed import colocated_join, write_bucketed_table
 
 
 def _skewed(spark):
@@ -56,10 +57,10 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         right = spark.range(0, 1000).select(
             F.col("id").alias("k"), (F.col("id") * 3).alias("b")
         )
-        write_bucketed(left, "t_bleft", ["k"], num_buckets=8)
-        write_bucketed(right, "t_bright", ["k"], num_buckets=8)
+        write_bucketed_table(left, "t_bleft", ["k"], num_buckets=8)
+        write_bucketed_table(right, "t_bright", ["k"], num_buckets=8)
 
-        joined = bucketed_join(spark, "t_bleft", "t_bright", on=["k"])
+        joined = colocated_join(spark, "t_bleft", "t_bright", on=["k"])
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan  # co-located: shuffle-free join
         assert joined.count() == 1000

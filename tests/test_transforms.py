@@ -138,6 +138,11 @@ def test_derive_cohort(spark):
     assert out == ["adults_v1", "pediatric_v1", None]
 
 
+def test_normalize_dataset_name(spark):
+    df = spark.createDataFrame([("HealthKitV2Samples.Deleted",)], "n string")
+    out = df.select(X.normalize_dataset_name(F.col("n")).alias("n")).first()
+    assert out.n == "healthkitv2samples_deleted"
+
 def test_drop_synthetic_partitions(spark):
     df = spark.createDataFrame([(1, 2, 3)], "a int, partition_0 int, partition_1 int")
     assert X.drop_synthetic_partitions(df).columns == ["a"]

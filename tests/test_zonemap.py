@@ -233,3 +233,60 @@ def test_mismatched_bound_type_keeps_files(spark, tmp_path):
     # v in [0,9] -> ids 0..9; Spark casts tag to int for the filter,
     # so tag in {1,2} keeps ids with id%5 in {1,2}: 1, 2, 6, 7
     assert sorted(r["k"] for r in pruned.collect()) == [1, 2, 6, 7]
+
+
+def test_timestamp_bounds_compare_as_timestamps(spark, tmp_path):
+    """Stats of a timestamp column are instants, not text: a bound equal
+    to a file's min must keep that file whether it is written with
+    ``T``, with a space or as a ``datetime``."""
+    import datetime
+
+    path = str(tmp_path / "ds")
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(1_700_000_000 + F.col("id") * 60).alias("ts"),
+    )
+    write_range_clustered_parquet(df, path, ["ts"], num_files=8)
+    manifest = build_zonemap(spark, path, ["ts"])
+    edge = datetime.datetime.fromisoformat(
+        manifest["files"][1]["columns"]["ts"]["min"]
+    )
+    want = [(int(edge.timestamp()) - 1_700_000_000) // 60]
+    for bound in (
+        edge.strftime("%Y-%m-%dT%H:%M:%S"),
+        edge.strftime("%Y-%m-%d %H:%M:%S"),
+        edge,
+    ):
+        pruned, report = read_pruned(spark, path, {"ts": (bound, bound)})
+        assert sorted(r["k"] for r in pruned.collect()) == want, bound
+        assert report["files_read"] < report["files_total"], bound
+
+
+def test_manifest_without_column_types_full_scans_until_refreshed(
+    spark, tmp_path
+):
+    """A manifest written before column types were recorded cannot tell
+    a timestamp's ISO stats from a string's: it reads as stale (full
+    scan, every row) until a refresh records the types."""
+    import json
+    import os
+
+    path = str(tmp_path / "ds")
+    _clustered(spark, path, n=1000, files=4)
+    build_zonemap(spark, path, ["v"])
+    sidecar = os.path.join(path, "_zonemap.json")
+    with open(sidecar) as fh:
+        legacy = json.load(fh)
+    del legacy["column_types"]
+    with open(sidecar, "w") as fh:
+        json.dump(legacy, fh, indent=1, sort_keys=True)
+    pruned, report = read_pruned(spark, path, {"v": (100, 199)})
+    assert report.get("stale_manifest") is True
+    assert pruned.count() == 100
+    merged = refresh_zonemap(spark, path)
+    assert merged["column_types"] == {"v": "bigint"}
+    assert merged["files"] == legacy["files"]
+    pruned, report = read_pruned(spark, path, {"v": (100, 199)})
+    assert "stale_manifest" not in report
+    assert report["files_read"] < report["files_total"]
+    assert pruned.count() == 100
