@@ -21,39 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recover_spark.functions.local import tiny_df as _tiny_df
+from recover_spark.sources.readers import load_table as _load
+from recover_spark.sql import TABLES as _TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 # the driver compares queries against oracles at sf0.01; oracles that
 # inline data-derived fixture constants (emb_pca_project) build them
 # from this directory
 SF_ORACLE = "/root/testdata/sf0.01"
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Timestamp normalization, robust to either physical encoding the
-    # generator has used across rounds:
-    #   * TIMESTAMP(NANOS): Spark rejects it by default — read as long
-    #     nanoseconds and truncate to microseconds exactly (bigint branch).
-    #   * naive TIMESTAMP(MICROS) (isAdjustedToUTC=false): Spark 4 infers
-    #     TIMESTAMP_NTZ, which unix_micros()/time-bucketing reject — turn
-    #     inference off so the column reads as a plain LTZ TIMESTAMP.
-    # Either way the session is pinned to UTC so wall-clock renderings and
-    # epoch arithmetic match the tz-naive DuckDB oracle bit-for-bit.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            # Exact integer division (epoch nanos exceed 2^53; double `/ 1000`
-            # truncates off-by-one-us vs DuckDB's exact ns->us truncation).
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _ts(col, alias):
@@ -5481,12 +5456,21 @@ def q_scan_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from recover_spark.sources.writers import write_range_clustered_parquet
-    from recover_spark.sources.zonemap import build_zonemap, read_pruned
+    from recover_spark.sources.zonemap import (
+        build_zonemap,
+        read_pruned,
+        refresh_zonemap,
+    )
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = os.path.join(tempfile.gettempdir(), f"recover_zonemap_{tag}")
     ds = os.path.join(root, "lineitem_by_key")
-    if not os.path.exists(os.path.join(ds, "_zonemap.json")):
+    if os.path.exists(os.path.join(ds, "_zonemap.json")):
+        # the dataset is cached across runs: refresh adds column_types
+        # to a manifest written without them (read as stale, a full
+        # scan) and scans only files the manifest has not seen
+        refresh_zonemap(spark, ds)
+    else:
         write_range_clustered_parquet(
             _load(spark, sf_dir, "lineitem"), ds, ["l_orderkey"], num_files=16
         )
@@ -6001,13 +5985,19 @@ def q_scan_bloommap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from recover_spark.sources.bloommap import build_bloommap, read_point_pruned
+    from recover_spark.sources.bloommap import (
+        build_bloommap,
+        read_point_pruned,
+        refresh_bloommap,
+    )
     from recover_spark.sources.writers import write_range_clustered_parquet
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = os.path.join(tempfile.gettempdir(), f"recover_bloommap_{tag}")
     ds = os.path.join(root, "lineitem_by_shipdate")
-    if not os.path.exists(os.path.join(ds, "_bloommap.json")):
+    if os.path.exists(os.path.join(ds, "_bloommap.json")):
+        refresh_bloommap(spark, ds)  # as in q_scan_zonemap
+    else:
         write_range_clustered_parquet(
             _load(spark, sf_dir, "lineitem"), ds, ["l_shipdate"], num_files=16
         )

@@ -109,7 +109,6 @@ def write_zordered_parquet(
     zorder_cols: Sequence[str],
     bits: int = 16,
     num_files: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet: range-partition and sort on the Morton
     key so every file/row group has tight min/max footer stats on ALL
@@ -125,6 +124,6 @@ def write_zordered_parquet(
         z.repartitionByRange(num_files, F.col("zvalue"))
         .sortWithinPartitions("zvalue")
         .drop("zvalue")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

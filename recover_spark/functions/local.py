@@ -28,7 +28,7 @@ def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
     )
 
 
-def write_local_parquet(rows, fields, out_dir: str, success: bool = True) -> None:
+def write_local_parquet(rows, fields, out_dir: str) -> None:
     """Driver-side parquet write of a METADATA-sized row set — the
     write twin of :func:`tiny_df` (r14 optimization round).
 
@@ -37,8 +37,8 @@ def write_local_parquet(rows, fields, out_dir: str, success: bool = True) -> Non
     rows the DRIVER already holds.  For geometry-bounded row sets
     (centroids, codebooks, frozen bin edges) pyarrow writes the same
     bytes with zero jobs; Spark reads the resulting directory exactly
-    like its own output (ParquetDataset-compatible layout, optional
-    ``_SUCCESS`` marker for completeness probes).
+    like its own output (ParquetDataset-compatible layout, with the
+    ``_SUCCESS`` marker completeness probes look for).
 
     ``fields`` is a list of ``(name, pyarrow.DataType)`` in column
     order; ``rows`` is an iterable of equally-ordered tuples.  Values
@@ -62,8 +62,7 @@ def write_local_parquet(rows, fields, out_dir: str, success: bool = True) -> Non
         }
     )
     pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-    if success:
-        open(os.path.join(out_dir, "_SUCCESS"), "w").close()
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
 
 
 def write_arrow_table(table, out_dir: str) -> None:

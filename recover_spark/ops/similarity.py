@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from recover_spark.functions.local import tiny_df, write_local_parquet
 from recover_spark.sources.atomic import commit_dir, heal_swap
+from recover_spark.sources.writers import rewrite_partitions
 from recover_spark.functions.vectors import cosine_from_norms, l2_norm
 
 # Driver-collected index GEOMETRY bounds (VERDICT r13 #4).  Probe
@@ -1322,8 +1323,8 @@ def delete_from_ivf_index(
 
     One filtered scan finds the lists that actually hold the deleted
     vectors (id predicate pushdown prunes row groups); only those list
-    partitions are rewritten (dynamic partition overwrite), with
-    emptied lists' directories dropped explicitly.  Centroids are
+    partitions are rewritten (``sources/writers.rewrite_partitions``,
+    which also drops emptied lists' directories).  Centroids are
     untouched — deletion does not move the coarse quantizer (retrain
     via ``rebuild_ivf_index`` when drift warrants it).
 
@@ -1332,9 +1333,6 @@ def delete_from_ivf_index(
     survive a million-row table; the DataFrame form plans as
     broadcast joins).  Returns {"touched_lists": [...], "n_deleted": n}.
     """
-    import os
-    import shutil
-
     heal_swap(index_path)
     if isinstance(vec_ids, DataFrame):
         ids_df = vec_ids.select(
@@ -1363,18 +1361,7 @@ def delete_from_ivf_index(
             .join(F.broadcast(ids_df), id_col, "left_anti")
             .localCheckpoint(eager=True)
         )
-        (
-            kept.repartition(len(touched), F.col("list"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list")
-            .parquet(index_path)
-        )
-        survivors = {r["list"] for r in kept.select("list").distinct().collect()}
-        for v in set(touched) - survivors:
-            d = os.path.join(index_path, f"list={v}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+        rewrite_partitions(kept, index_path, "list", touched)
     return {"touched_lists": touched, "n_deleted": n_ids}
 
 

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from recover_spark.functions.text import tokens
 from recover_spark.sources.atomic import write_text_atomic
+from recover_spark.sources.writers import rewrite_partitions
 
 META_NAME = "_text_index.json"
 
@@ -249,18 +250,6 @@ def _read_or_empty(spark: SparkSession, p: str, schema: str) -> DataFrame:
         return spark.createDataFrame([], schema)
 
 
-def _drop_emptied_partitions(base, part_col, touched, survivors) -> None:
-    """Remove hive partition dirs that a deletion emptied entirely
-    (dynamic overwrite cannot replace a partition it writes no rows
-    for)."""
-    import shutil
-
-    for v in set(touched) - set(survivors):
-        d = os.path.join(base, f"{part_col}={v}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-
-
 def delete_from_text_index(
     spark: SparkSession,
     path: str,
@@ -282,8 +271,8 @@ def delete_from_text_index(
       anywhere in the operation (VERDICT r6 #2: the old df/n_docs
       re-derivation scanned the whole remaining index per deletion
       batch);
-    - ``postings/``: dynamic partition overwrite of the touched
-      ``tb`` buckets only;
+    - ``postings/``: ``rewrite_partitions`` of the touched ``tb``
+      buckets only (emptied buckets removed);
     - ``vectors/``: same, over the computed ``vb`` values;
     - ``df/``: the old table joined against the decrement counts
       (vocab-sized map join, zero-df terms dropped — identical to a
@@ -371,20 +360,7 @@ def delete_from_text_index(
             .join(F.broadcast(ids_df), "doc_id", "left_anti")
             .localCheckpoint(eager=True)  # never read what we replace
         )
-        (
-            kept.repartition(len(touched_tb), F.col("tb"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tb")
-            .parquet(postings_path)
-        )
-        # dynamic overwrite only replaces partitions PRESENT in the
-        # output: a bucket whose every posting was deleted writes no
-        # rows and would keep its stale files — drop those dirs
-        _drop_emptied_partitions(
-            postings_path, "tb", touched_tb,
-            {r["tb"] for r in kept.select("tb").distinct().collect()},
-        )
+        rewrite_partitions(kept, postings_path, "tb", touched_tb)
     if os.path.isdir(vectors_path) and touched_vb:
         vecs = spark.read.parquet(vectors_path)
         kept_v = (
@@ -392,17 +368,7 @@ def delete_from_text_index(
             .join(F.broadcast(ids_df), "doc_id", "left_anti")
             .localCheckpoint(eager=True)
         )
-        (
-            kept_v.repartition(max(1, len(touched_vb)), F.col("vb"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("vb")
-            .parquet(vectors_path)
-        )
-        _drop_emptied_partitions(
-            vectors_path, "vb", touched_vb,
-            {r["vb"] for r in kept_v.select("vb").distinct().collect()},
-        )
+        rewrite_partitions(kept_v, vectors_path, "vb", touched_vb)
     # df decrement from the deleted postings themselves — equal to a
     # re-aggregation over the remaining index because postings are
     # (doc, term)-unique, at O(vocab + deleted postings) instead of

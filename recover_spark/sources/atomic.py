@@ -38,6 +38,11 @@ renames can rename ``.old`` back over the live path and fail the
 writer's second rename.  Maintenance verbs and merges are offline
 jobs; run one at a time per state directory.
 
+Partition-level replaces are not directory commits: replacing the
+hive partitions a batch touched (and removing those a deletion emptied)
+rides Spark's own job commit and lives in ``sources/writers.py``
+(``overwrite_partitions_dynamic``, ``rewrite_partitions``).
+
 Whole datasets get a stronger layout, because even a rename pair
 (dataset -> archive, staging -> dataset) has a window with NO live
 dataset — ``write_dataset_atomic``::
@@ -48,8 +53,9 @@ dataset — ``write_dataset_atomic``::
       gen-00000002/
       .staging-<run_id>/  <- in-flight write, invisible to readers
 
-1. write the new generation into ``.staging-<run_id>`` — readers never
-   resolve staging dirs, so a torn write is invisible;
+1. write the new generation into ``.staging-<run_id>`` with
+   ``write_partitioned_parquet`` — readers never resolve staging dirs,
+   so a torn write is invisible;
 2. rename staging -> ``gen-<seq>`` — a complete but not-yet-live
    generation; a crash here leaves it unreferenced (pruned later);
 3. promote by writing ``_CURRENT`` with ``write_text_atomic``;
@@ -62,7 +68,7 @@ renames become manifest commits (the Iceberg/Delta pattern); the
 local-filesystem implementation keeps the same reader contract.
 
 Citations: reference copy-then-delete window at
-src/glue/jobs/json_to_parquet.py:348-366 (archive_existing_datasets →
+src/glue/jobs/json_to_parquet.py:348-366 (archive copy → delete →
 write), the defect this replaces rather than mirrors.
 """
 
@@ -75,7 +81,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from recover_spark.sources.writers import DEFAULT_RECORDS_PER_FILE
+from recover_spark.sources.writers import write_partitioned_parquet
 
 _POINTER = "_CURRENT"
 _GEN_PREFIX = "gen-"
@@ -241,7 +247,6 @@ def write_dataset_atomic(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] = (),
-    records_per_file: int = DEFAULT_RECORDS_PER_FILE,
     run_id: str = "run",
     keep_generations: int = 2,
     commit_ts: float | None = None,
@@ -260,8 +265,8 @@ def write_dataset_atomic(
     "after-rename" | "after-promote") at which a simulated crash is
     raised; production callers leave it None.
 
-    Scale shape: the data write itself is the ordinary distributed
-    partitioned-parquet write (staging dir is on the same filesystem,
+    Scale shape: the data write itself is ``write_partitioned_parquet``,
+    the ordinary distributed sink (staging dir is on the same filesystem,
     so executors write in place); the commit adds two metadata renames
     and one pointer write — O(1) driver-side work regardless of data
     size.
@@ -275,13 +280,7 @@ def write_dataset_atomic(
     if staging.exists():
         shutil.rmtree(staging)
 
-    writer = df.write.mode("overwrite").option(
-        "maxRecordsPerFile", records_per_file
-    )
-    parts = [p for p in partition_by if p in df.columns]
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(str(staging))
+    write_partitioned_parquet(df, str(staging), partition_by)
     import json as _json
     import time as _time
 

@@ -41,30 +41,26 @@ def write_bucketed_table(
     table: str,
     bucket_cols: Sequence[str],
     num_buckets: int,
-    sort_cols: Sequence[str] | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
-    one_file_per_bucket: bool = True,
 ) -> None:
-    """Write ``df`` as a catalog-registered bucketed parquet table.
-
-    ``sort_cols`` defaults to ``bucket_cols`` — sorted buckets let the
-    merge join skip its Sort when buckets are single files.  ``path``
-    makes the table external (data survives catalog drops).
+    """Write ``df`` as a catalog-registered bucketed parquet table,
+    one file per bucket, sorted on ``bucket_cols`` — sorted single-file
+    buckets let the merge join skip its Sort.  ``path`` makes the table
+    external (data survives catalog drops).
     """
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
     cols = list(bucket_cols)
-    sorts = list(sort_cols) if sort_cols is not None else cols
-    out = df
-    if one_file_per_bucket:
-        # Same murmur3 pmod hash as the bucket-id computation: after
-        # this exchange each task holds exactly one bucket, so each
-        # bucket is one file and the written sort order is trusted.
-        out = df.repartition(num_buckets, *cols)
-    writer = out.write.format("parquet").mode(mode).bucketBy(num_buckets, *cols)
-    if sorts:
-        writer = writer.sortBy(*sorts)
+    # Same murmur3 pmod hash as the bucket-id computation: after this
+    # exchange each task holds exactly one bucket, so each bucket is one
+    # file and the written sort order is trusted.
+    writer = (
+        df.repartition(num_buckets, *cols)
+        .write.format("parquet")
+        .mode("overwrite")
+        .bucketBy(num_buckets, *cols)
+        .sortBy(*cols)
+    )
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recover_spark.sources.writers import overwrite_partitions_dynamic
+
 
 def partition_file_counts(base: str, part_col: str) -> dict[int, int]:
     """{partition value: parquet file count} from the directory layout
@@ -63,12 +65,8 @@ def compact_partitions(
     # materialize before writing: Spark (correctly) refuses to
     # overwrite a path that the plan still reads from
     pinned = df.localCheckpoint(eager=True)
-    (
-        pinned.repartition(len(touched), F.col(part_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .parquet(base)
+    overwrite_partitions_dynamic(
+        pinned.repartition(len(touched), F.col(part_col)), base, [part_col]
     )
     after = sum(partition_file_counts(base, part_col).values())
     return {

@@ -1,12 +1,28 @@
-"""K1-K6 — partitioned sinks with archive-then-replace.
+"""K1-K7 sinks (K5 is in ``sources/atomic.py``) and the one partition replace.
 
 Reference K1/K2: parquet write partitioned by cohort, coalesced to ~1e6
-rows per file (json_to_parquet.py:377,396-416).  K5: copy existing output
-to ``archive/{date}_{run_id}/`` before overwrite (:304-367).
+rows per file (json_to_parquet.py:377,396-416).  Spark-first:
+``maxRecordsPerFile`` replaces the coalesce arithmetic — it sizes files
+without collapsing parallelism (a plain ``coalesce(n)`` would serialize
+the write through n tasks; at 100 TB that matters).
 
-Spark-first: ``maxRecordsPerFile`` replaces the coalesce arithmetic — it
-sizes files without collapsing parallelism (a plain ``coalesce(n)``
-would serialize the write through n tasks; at 100 TB that matters).
+``write_partitioned_parquet`` replaces a whole directory.  Every write
+in the package that replaces SOME hive partitions of a live dataset
+goes through one of two functions here, with the same file-size cap:
+
+- ``overwrite_partitions_dynamic`` — replace ONLY the hive partitions
+  ``df`` has rows for (``partitionOverwriteMode=dynamic`` as a writer
+  option; session conf is never touched).  A partition without rows in
+  ``df`` is left alone: a replayed batch whose kept set is empty keeps
+  the first attempt's ``__batch=<id>`` partition;
+- ``rewrite_partitions`` — the same write over a known ``touched``
+  set, after which every touched partition that came out empty is
+  removed (a deletion that emptied a bucket).  The emptied set comes
+  from an observation riding the write, not from another job.
+
+K5 (archive-then-replace, json_to_parquet.py:304-367) is not here:
+``sources/atomic.write_dataset_atomic`` writes each generation with
+``write_partitioned_parquet`` and keeps the previous ones readable.
 
 The parquet codec is not chosen here: ``get_spark`` sets zstd as the
 session default, so every parquet sink below writes zstd.
@@ -14,67 +30,46 @@ session default, so every parquet sink below writes zstd.
 
 from __future__ import annotations
 
+import os
 import shutil
-import time
-from pathlib import Path
-from collections.abc import Sequence
+from collections.abc import Collection, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_RECORDS_PER_FILE = 1_000_000  # json_to_parquet.py:377
 
 
-def archive_existing(path: str, archive_root: str | None = None, run_id: str = "run") -> str | None:
-    """K5 — move current dataset to archive/{date}_{run_id}/ before replace.
-
-    Local-filesystem implementation; on object stores this is a prefix
-    copy.  Returns the archive path, or None when nothing existed.
-    """
-    src = Path(path)
-    if not src.exists():
-        return None
-    date = time.strftime("%Y-%m-%d")
-    dest_root = Path(archive_root) if archive_root else src.parent / "archive"
-    dest = dest_root / f"{date}_{run_id}" / src.name
-    dest.parent.mkdir(parents=True, exist_ok=True)
-    shutil.move(str(src), str(dest))
-    return str(dest)
+def _sized(df: DataFrame) -> DataFrameWriter:
+    return df.write.mode("overwrite").option(
+        "maxRecordsPerFile", DEFAULT_RECORDS_PER_FILE
+    )
 
 
 def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] = ("cohort",),
-    records_per_file: int = DEFAULT_RECORDS_PER_FILE,
-    mode: str = "overwrite",
-    archive_first: bool = False,
-    run_id: str = "run",
 ) -> None:
-    """K1/K2 (+K5) — hive-partitioned parquet sink with file sizing."""
-    if archive_first:
-        archive_existing(path, run_id=run_id)
-    writer = df.write.mode(mode).option("maxRecordsPerFile", records_per_file)
+    """K1/K2 — replace ``path`` with ``df`` as hive-partitioned parquet
+    (partition columns ``df`` lacks are skipped)."""
+    writer = _sized(df)
     parts = [p for p in partition_by if p in df.columns]
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(path)
 
 
-def write_csv_ledger(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_csv_ledger(df: DataFrame, path: str) -> None:
     """K6 — record-count ledger CSV sink (json_to_parquet.py:492-536).
 
     Ledgers are tiny (export-date cardinality); coalesce(1) gives the
     single CSV file the reference's downstream tooling expects.
     """
-    df.coalesce(1).write.mode(mode).option("header", True).csv(path)
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
-def copy_into_table(
-    df: DataFrame,
-    table_name: str,
-    mode: str = "append",
-) -> None:
+def copy_into_table(df: DataFrame, table_name: str) -> None:
     """K7 — warehouse load with by-name column matching.
 
     Snowflake ``COPY INTO ... MATCH_BY_COLUMN_NAME=CASE_SENSITIVE``
@@ -82,8 +77,6 @@ def copy_into_table(
     by NAME against the target table, missing target columns -> null,
     extra source columns dropped.
     """
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
     if spark.catalog.tableExists(table_name):
         target = spark.table(table_name).schema
@@ -94,22 +87,23 @@ def copy_into_table(
             for f in target.fields
         ]
         df = df.select(*aligned)
-    df.write.mode(mode).saveAsTable(table_name)
+    df.write.mode("append").saveAsTable(table_name)
 
 
 def write_ndjson_parts(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] = (),
-    compression: str | None = "gzip",
     records_per_file: int = 500_000,
-    mode: str = "overwrite",
 ) -> None:
     """K3/K4 — NDJSON part-file sink (size-rotated in the reference,
-    record-rotated here; s3_to_json.py:495-614, raw/app.py:186-248)."""
-    writer = df.write.mode(mode).option("maxRecordsPerFile", records_per_file)
-    if compression:
-        writer = writer.option("compression", compression)
+    record-rotated here; s3_to_json.py:495-614, raw/app.py:186-248),
+    gzip-compressed."""
+    writer = (
+        df.write.mode("overwrite")
+        .option("maxRecordsPerFile", records_per_file)
+        .option("compression", "gzip")
+    )
     parts = [p for p in partition_by if p in df.columns]
     if parts:
         writer = writer.partitionBy(*parts)
@@ -121,7 +115,6 @@ def write_range_clustered_parquet(
     path: str,
     cluster_cols: Sequence[str],
     num_files: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Range-clustered parquet layout for min/max data skipping.
 
@@ -141,7 +134,7 @@ def write_range_clustered_parquet(
     (
         df.repartitionByRange(num_files, *cols)
         .sortWithinPartitions(*cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -150,7 +143,6 @@ def overwrite_partitions_dynamic(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str],
-    records_per_file: int = DEFAULT_RECORDS_PER_FILE,
 ) -> None:
     """Replace ONLY the hive partitions present in ``df``, leaving all
     other partitions untouched (Spark dynamic partition overwrite).
@@ -159,16 +151,41 @@ def overwrite_partitions_dynamic(
     that reprocesses one export must not truncate the other 51 weeks
     (static overwrite mode would).  Pairing with the batch-id sidecar
     idiom (streaming/matview.py) makes reruns idempotent per partition.
+    A partition ``df`` has no rows for is left alone, so a replay whose
+    kept set is empty keeps what the first attempt wrote
+    (``rewrite_partitions`` is the variant that removes such partitions).
+    The mode is a writer option: session conf is never touched.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .option("maxRecordsPerFile", records_per_file)
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        _sized(df)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
+def rewrite_partitions(
+    df: DataFrame,
+    path: str,
+    part_col: str,
+    touched: Collection,
+) -> None:
+    """Replace the ``touched`` partitions of ``path`` with ``df`` (one
+    file per partition), then remove each touched partition ``df`` has
+    no rows for — dynamic overwrite alone would keep its stale files.
+
+    ``df`` must not read ``path`` (checkpoint it first).  The written
+    partition values are collected by an observation on the write's
+    own result stage, so the cleanup costs no extra job.
+    """
+    written = Observation()
+    # observed above the exchange: below it, a rewrite whose every
+    # touched partition came out empty reports no metrics row at all
+    out = df.repartition(max(1, len(touched)), F.col(part_col)).observe(
+        written, F.collect_set(part_col).alias("parts")
+    )
+    overwrite_partitions_dynamic(out, path, [part_col])
+    for v in set(touched) - set(written.get["parts"]):
+        emptied = os.path.join(path, f"{part_col}={v}")
+        if os.path.isdir(emptied):
+            shutil.rmtree(emptied)

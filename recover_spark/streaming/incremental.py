@@ -36,6 +36,7 @@ from recover_spark.sources.atomic import (
     replayed,
     write_text_atomic,
 )
+from recover_spark.sources.writers import overwrite_partitions_dynamic
 
 
 def incremental_ingest(
@@ -181,7 +182,6 @@ def merge_pipeline_batch(
 
     from recover_spark.operators.dedup import dedup_latest
     from recover_spark.operators.deletes import drop_deleted
-    from recover_spark.sources.writers import overwrite_partitions_dynamic
 
     keys = list(index_fields)
     bucket = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
@@ -310,38 +310,6 @@ def pipeline_tables_from_state(
     return route_tables(df, name, index_fields)
 
 
-def _migrate_legacy_unpartitioned(path: str) -> int:
-    """One-time layout migration for the r6 switch to ``__batch=<id>``
-    hive partitioning: a state/output directory written by the earlier
-    UNPARTITIONED layout holds root-level parquet files, and mixing
-    those with ``__batch=N`` subdirectories breaks Spark's partition
-    discovery.  Fold any root-level data files into a ``__batch=-1``
-    partition (the same convention ``compact_dedup_state`` uses for
-    compacted state) so old and new layouts compose.  Content is
-    unchanged — dedup semantics never depend on which partition a row
-    lives in.  Returns the number of files moved."""
-    import glob
-    import os
-
-    if not os.path.isdir(path):
-        return 0
-    legacy = [
-        f
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-        if os.path.isfile(f)
-    ]
-    if not legacy:
-        return 0
-    dest = os.path.join(path, "__batch=-1")
-    os.makedirs(dest, exist_ok=True)
-    for f in legacy:
-        os.rename(f, os.path.join(dest, os.path.basename(f)))
-    success = os.path.join(path, "_SUCCESS")
-    if os.path.isfile(success):
-        os.remove(success)
-    return len(legacy)
-
-
 def dedup_against_corpus(
     stream: DataFrame,
     state_path: str,
@@ -375,8 +343,6 @@ def dedup_against_corpus(
     spark = stream.sparkSession
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
-        _migrate_legacy_unpartitioned(state_path)
-        _migrate_legacy_unpartitioned(output_path)
         digest = F.md5(F.lower(F.trim(F.col(text_col))))
         w = Window.partitionBy("__digest").orderBy(F.col(id_col))
         fresh = (
@@ -394,17 +360,16 @@ def dedup_against_corpus(
             # partition overwrite: a replay (crash after either write)
             # REPLACES its own partition instead of appending a second
             # copy — per-batch idempotence by construction (ADVICE r5),
-            # with no cross-batch coordination.
-            fresh.drop("__digest").withColumn(
-                "__batch", F.lit(_batch_id)
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("__batch").parquet(output_path)
-            fresh.select("__digest").withColumn(
-                "__batch", F.lit(_batch_id)
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("__batch").parquet(state_path)
+            # with no cross-batch coordination.  A replay of a batch
+            # whose digests are all in the state keeps nothing, and
+            # writes nothing: its partitions are left as they were.
+            tagged = fresh.withColumn("__batch", F.lit(_batch_id))
+            overwrite_partitions_dynamic(
+                tagged.drop("__digest"), output_path, ["__batch"]
+            )
+            overwrite_partitions_dynamic(
+                tagged.select("__digest", "__batch"), state_path, ["__batch"]
+            )
         finally:
             fresh.unpersist()
 
@@ -462,8 +427,8 @@ def near_dedup_against_corpus(
     before the marker, the probe itself converges the replay: every
     already-indexed document matches its own stored copy at cosine 1.0
     and is dropped, so the index never receives duplicate postings —
-    and the output partition is overwritten with that (identical)
-    kept set.
+    and the kept set is empty, so the output write has no rows and
+    leaves the first attempt's ``__batch=<id>`` partition as it was.
     """
     import os
 
@@ -477,16 +442,15 @@ def near_dedup_against_corpus(
     )
 
     def _write_output(kept: DataFrame, batch_id: int) -> None:
-        kept.withColumn("__batch", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "__batch"
-        ).parquet(output_path)
+        overwrite_partitions_dynamic(
+            kept.withColumn("__batch", F.lit(batch_id)),
+            output_path,
+            ["__batch"],
+        )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if replayed(index_path, batch_id, APPEND_MARKER):
             return
-        _migrate_legacy_unpartitioned(output_path)
         pairs = cosine_threshold_pairs(
             batch, threshold, id_col=id_col, text_col=text_col
         )

@@ -10,7 +10,7 @@ import pytest
 from recover_spark.plans import DatasetPipeline
 from recover_spark.schemas import SchemaRegistry, parse_type
 from recover_spark.sources.readers import read_ndjson
-from recover_spark.sources.writers import archive_existing, write_partitioned_parquet
+from recover_spark.sources.writers import write_partitioned_parquet
 
 
 def test_parse_type_grammar(spark):  # type parsing needs a live JVM
@@ -91,10 +91,6 @@ def test_partitioned_write_and_archive(spark, tmp_path):
     assert parts == {"cohort=adults_v1", "cohort=pediatric_v1"}
     back = spark.read.parquet(out)
     assert back.count() == 2
-
-    archived = archive_existing(out, run_id="r1")
-    assert archived and os.path.exists(archived)
-    assert not os.path.exists(out)
 
 
 def test_dataset_pipeline_end_to_end(spark, tmp_path):

@@ -550,6 +550,8 @@ class TestPartitionMaintenance:
             write_partitioned_parquet,
         )
 
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
         path = str(tmp_path / "t")
         base = spark.createDataFrame(
             [("a", 1), ("a", 2), ("b", 3), ("c", 4)], "p string, v int"
@@ -560,10 +562,11 @@ class TestPartitionMaintenance:
         overwrite_partitions_dynamic(fix, path, ["p"])
         got = {(r.p, r.v) for r in spark.read.parquet(path).collect()}
         assert got == {("a", 99), ("b", 3), ("c", 4)}
-        # static mode untouched after the call
-        assert spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode"
-        ) == "static"
+        # static mode untouched after the call: the session value is
+        # exactly what it was (Spark spells its default "STATIC" and
+        # matches the mode case-insensitively)
+        assert spark.conf.get(key) == before
+        assert before.lower() == "static"
 
 
 # -- leakage-safe grouped split ---------------------------------------------

@@ -441,56 +441,60 @@ def test_dedup_against_corpus_across_runs(spark, tmp_path):
     assert got2 == {1, 3, 10}
 
 
-def test_dedup_against_corpus_migrates_legacy_unpartitioned_state(
+def test_dedup_against_corpus_replay_leaves_partitions_alone(
     spark, tmp_path
 ):
-    """r6 switched state/output to __batch=<id> hive partitioning; a
-    directory produced by the earlier UNPARTITIONED layout (root-level
-    parquet files) must be folded into a __batch=-1 partition on the
-    next run rather than breaking partition discovery — and its
-    digests must still dedup arrivals."""
-    import os
-
+    """A fresh checkpoint replays every batch id; each replayed batch's
+    digests are all in the state, so its kept frame is empty.  The
+    empty per-batch writes must leave the first run's ``__batch=<id>``
+    partitions of the output and the digest state as they were."""
     from recover_spark.streaming.incremental import dedup_against_corpus
 
     src = tmp_path / "src"
     src.mkdir()
     state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
+    schema = "doc_id long, text string"
 
-    # fabricate the legacy layouts: root-level parquet, no __batch
-    spark.createDataFrame(
-        [("33cf6123dd5c46d7b6fdc9cd72abbf66",)], "__digest string"
-    ).coalesce(1).write.parquet(state)  # md5 of "alpha beta"
-    spark.createDataFrame(
-        [(1, "alpha beta")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(out)
-    assert any(
-        f.endswith(".parquet") for f in os.listdir(state)
-    ), "premise: legacy root-level files"
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = dedup_against_corpus(stream, state, str(tmp_path / ckpt), out)
+        q.awaitTermination(120)
+
+    def snapshot(path):
+        return sorted(
+            (r["__batch"], *r[:-1])
+            for r in spark.read.parquet(path).collect()
+        )
 
     _write_batch(
         str(src / "b1.json"),
         [
-            {"doc_id": 9, "text": "alpha beta"},     # dup of legacy digest
-            {"doc_id": 10, "text": "epsilon zeta"},  # novel
+            {"doc_id": 1, "text": "alpha beta"},
+            {"doc_id": 2, "text": "gamma delta"},
+        ],
+        mtime_offset_s=-60,
+    )
+    _write_batch(
+        str(src / "b2.json"),
+        [
+            {"doc_id": 3, "text": "alpha beta"},  # cross-batch dup of 1
+            {"doc_id": 4, "text": "epsilon zeta"},
         ],
         mtime_offset_s=0,
     )
-    stream = spark.readStream.schema("doc_id long, text string").json(
-        str(src)
-    )
-    q = dedup_against_corpus(stream, state, ckpt, out)
-    q.awaitTermination(120)
+    run("ckpt1")
+    out1, state1 = snapshot(out), snapshot(state)
+    assert {r[0] for r in out1} == {0, 1}
+    assert sorted(r[1] for r in out1) == [1, 2, 4]
 
-    # legacy files now live under __batch=-1, none left at the root
-    assert not any(
-        f.endswith(".parquet") for f in os.listdir(state)
-    )
-    assert os.path.isdir(os.path.join(state, "__batch=-1"))
-    got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {1, 10}
+    run("ckpt2")
+    assert snapshot(out) == out1
+    assert snapshot(state) == state1
 
 
 def test_topk_matview_capacity_bound_and_hot_keys_exact(spark, tmp_path):

@@ -373,6 +373,53 @@ class TestStreamingNearDedup:
         ) == [1, 3, 12, 22]
 
 
+    def test_replay_without_marker_leaves_output_partition_alone(
+        self, spark, tmp_path
+    ):
+        """The crash window after the index append, before the marker:
+        with ``_applied_batch`` gone, a fresh checkpoint replays the
+        batch, the probe drops every already-indexed doc, and the empty
+        kept set must leave the batch's output partition as it was."""
+        import os
+
+        from recover_spark.sources.atomic import APPEND_MARKER
+        from recover_spark.streaming.incremental import (
+            near_dedup_against_corpus,
+        )
+
+        src = str(tmp_path / "src")
+        os.makedirs(src)
+        spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog"),
+             (2, "the quick brown fox jumped over the lazy dog"),
+             (3, "pack my box with five dozen liquor jugs")],
+            "doc_id long, text string",
+        ).coalesce(1).write.mode("overwrite").parquet(src)
+        out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+
+        def run(ckpt):
+            stream = spark.readStream.schema(
+                "doc_id long, text string"
+            ).parquet(src)
+            q = near_dedup_against_corpus(
+                stream, idx, str(tmp_path / ckpt), out, threshold=0.8
+            )
+            q.awaitTermination(120)
+
+        def snapshot():
+            return sorted(
+                (r["__batch"], r["doc_id"], r["text"])
+                for r in spark.read.parquet(out).collect()
+            )
+
+        run("ckpt1")
+        first = snapshot()
+        assert [r[1] for r in first] == [1, 3]
+        os.remove(os.path.join(idx, APPEND_MARKER))
+        run("ckpt2")
+        assert snapshot() == first
+
+
 class TestIndexCompaction:
     def test_lifecycle_build_append_compact_probe_equality(
         self, spark, tmp_path
